@@ -524,6 +524,16 @@ def run_scaling(lo: int, hi: int, scaling_turns: int, cpus: int) -> dict:
             if ln.startswith("#"):
                 print(ln, file=sys.stderr)
 
+    def _leg_result(args, returncode: int, stdout: str, stderr: str) -> float:
+        """The leg's turns/s; a failed child raises with its whole stderr,
+        not only its ``#`` trace lines."""
+        if returncode != 0:
+            raise RuntimeError(
+                f"scaling leg {' '.join(args)} exited {returncode}:\n{stderr}"
+            )
+        _relay(stderr)
+        return float(stdout.strip())
+
     def run_leg(m: int) -> float:
         _settle()
         out = subprocess.run(
@@ -532,8 +542,7 @@ def run_scaling(lo: int, hi: int, scaling_turns: int, cpus: int) -> dict:
             text=True,
             env={**os.environ, "PYTHONPATH": here},
         )
-        _relay(out.stderr)
-        return float(out.stdout.strip())
+        return _leg_result(out.args, out.returncode, out.stdout, out.stderr)
 
     def run_leg_multi(n_exec: int, m: int) -> float:
         """The 4N-EXECUTOR leg: ``n_exec`` CONCURRENT pinned ``local[m]``
@@ -563,12 +572,11 @@ def run_scaling(lo: int, hi: int, scaling_turns: int, cpus: int) -> dict:
                     env={**os.environ, "PYTHONPATH": here},
                 )
             )
-        total = 0.0
-        for p in procs:
-            out, err = p.communicate()
-            _relay(err)
-            total += float(out.strip())
-        return total
+        # wait for every child before raising, so none is left running
+        done = [(p, *p.communicate()) for p in procs]
+        return sum(
+            _leg_result(p.args, p.returncode, out, err) for p, out, err in done
+        )
 
     # SYMMETRIC estimator (r2 ADVICE fix): BOTH legs are drawn twice,
     # interleaved (hi, lo, hi, lo) so each leg's draws are separated

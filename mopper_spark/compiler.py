@@ -2,9 +2,9 @@
 
 Compiles each mapping function tree
 (``/root/reference/src/operator/extension.rs:124-190``) into a native Spark
-Column expression where possible, falling back to Arrow-batched pandas UDFs
-only for percent-encoding and general IRI validation.  Row-at-a-time Python
-(``BatchEvalPython``) never appears in the plan.
+Column expression; the only Python a compiled plan can hold is a
+vectorized FnO implementation registered in ``MopperOptions.fno_registry``.
+Row-at-a-time Python (``BatchEvalPython``) never appears in the plan.
 
 Scale notes
 -----------
@@ -28,14 +28,9 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 from mopper_spark import rules
-from mopper_spark.functions.encoding import (
-    KEEP_CHARS,
-    pct_encode,
-    pct_encode_series,
-)
+from mopper_spark.functions.encoding import KEEP_CHARS
 from mopper_spark.functions.iri import (
     RELREF_FULLMATCH,
     URI_ALLOWED_CHARS,
@@ -58,11 +53,6 @@ _SCHEME_PREFIX_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
 class CompiledTerm:
     col: Column
     kind: str  # "iri" | "lit" | "blank" | "str"
-
-
-@F.pandas_udf(StringType())
-def _pct_encode_udf(s: pd.Series) -> pd.Series:
-    return pct_encode_series(s)
 
 
 def _is_keep_char(c: Column) -> Column:
@@ -94,23 +84,6 @@ def pct_encode_native(col: Column) -> Column:
         "",
     )
     return F.when(_is_keep_char(col), col).otherwise(charwise)
-
-
-_iri_udf_cache: dict[str | None, object] = {}
-
-
-def _iri_udf(base_iri: str | None):
-    """Arrow-batched fallback for Iri resolution (kept for A/B testing and
-    as the behavioural reference for ``iri_finalize_native``)."""
-    if base_iri not in _iri_udf_cache:
-        base = base_iri  # capture by closure; extra params break UDF inference
-
-        @F.pandas_udf(StringType())
-        def fin(s: pd.Series) -> pd.Series:
-            return iri_finalize(s.fillna(""), base)
-
-        _iri_udf_cache[base_iri] = fin
-    return _iri_udf_cache[base_iri]
 
 
 def iri_finalize_native(col: Column, base_iri: str | None) -> Column:

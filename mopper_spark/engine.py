@@ -26,7 +26,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from mopper_spark.compiler import compile_extend
 from mopper_spark.options import MopperOptions
@@ -89,8 +88,6 @@ class PlanExecutor:
             df = resolve_source(
                 self.spark, node.config, self.options, self.registry, node.attributes
             )
-            if self.options.persist_shared_sources and len(set(node.to)) > 1:
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
         elif op == "JoinOp":
             df = self._join(graph, node)
         elif op == "ExtendOp":

@@ -21,10 +21,6 @@ class MopperOptions:
     deduplicate: bool = False
     # resolve relative source paths against this dir (tests.rs:33-37)
     working_dir_hint: str | None = None
-    # persist (MEMORY_AND_DISK) sources consumed by >1 downstream branch;
-    # off by default — at 100 TB a pruned parquet re-scan usually beats
-    # caching, and Spark reuses exchanges where it matters
-    persist_shared_sources: bool = False
     # named vectorized implementations for FnO calls
     fno_registry: dict = field(default_factory=dict)
     # serialize literal datatype/language annotations ("v"^^<dtype>,

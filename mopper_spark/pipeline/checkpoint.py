@@ -7,8 +7,12 @@ computes, writes its output parquet atomically (write → fsync manifest via
 tmp+rename), and records lineage:
 
 - the input fingerprint (caller-supplied config/content hash),
-- row count and per-partition-column counts,
-- output file count,
+- counters, all read in this process from the parquet footers of the
+  part files the write just produced (no Spark job, no data scan):
+  ``files_detail`` maps each part file's path relative to the stage's
+  ``data`` dir to its footer row count, ``rows`` is their sum, ``files``
+  their number, and ``partitions`` sums them per partition directory,
+  keyed by the unescaped ``col=value`` values joined with ``"|"``,
 - wall-clock duration.
 
 Atomicity model: Spark's parquet writer is itself atomic-ish per directory
@@ -23,12 +27,15 @@ from __future__ import annotations
 import json
 import os
 import time
-from urllib.parse import unquote, urlparse
 from dataclasses import dataclass, field
 from typing import Callable
+from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+# directory name Spark writes for a NULL (or empty-string) partition value
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 @dataclass
@@ -85,34 +92,9 @@ class CheckpointManager:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_path)
 
+        # lazy read-back: cuts the lineage for the stages downstream
         out = self.spark.read.parquet(data_path)
-        counters: dict = {"rows": out.count()}
-        if partition_by:
-            counters["partitions"] = {
-                "|".join(str(r[c]) for c in partition_by): r["count"]
-                for r in out.groupBy(*partition_by).count().collect()
-            }
-        # per-partition lineage: one row-count per written parquet file
-        # (the resume unit) — recorded for audit/debugging of partial or
-        # corrupt partitions (resume itself gates on fingerprint+_SUCCESS)
-        abs_data = os.path.abspath(data_path)
-        counters["files_detail"] = {
-            # input_file_name is a file:// URI (percent-encoded) — decode
-            # before computing the stage-relative key, keeping partition
-            # subdirs in it
-            os.path.relpath(unquote(urlparse(r["f"]).path), abs_data): r["count"]
-            for r in out.groupBy(F.input_file_name().alias("f"))
-            .count()
-            .collect()
-        }
-        # count files on disk, not via the groupBy: a zero-row part file
-        # produces no group but is still a real output file
-        counters["files"] = sum(
-            1
-            for _, _, files in os.walk(data_path)
-            for fn in files
-            if fn.endswith(".parquet")
-        )
+        counters = _footer_counters(data_path, partition_by)
         counters["seconds"] = round(time.time() - t0, 3)
 
         man = {
@@ -130,3 +112,27 @@ class CheckpointManager:
 
         self.metrics.append({"stage": name, "skipped": False, **counters})
         return StageResult(name, out, skipped=False, manifest=man)
+
+
+def _footer_counters(data_path: str, partition_by: list[str] | None) -> dict:
+    """Stage counters from the footers of the part files under ``data_path``."""
+    files_detail: dict[str, int] = {}
+    partitions: dict[str, int] = {}
+    for dirpath, _, names in os.walk(data_path):
+        rel_dir = os.path.relpath(dirpath, data_path)
+        # partition values as the read-back shows them (NULL reads as None)
+        key = "|".join(
+            "None" if v == _NULL_PARTITION else unquote(v)
+            for v in (seg.partition("=")[2] for seg in rel_dir.split(os.sep))
+        )
+        for fn in names:
+            if fn.endswith(".parquet"):
+                n = pq.read_metadata(os.path.join(dirpath, fn)).num_rows
+                files_detail[os.path.normpath(os.path.join(rel_dir, fn))] = n
+                partitions[key] = partitions.get(key, 0) + n
+    counters: dict = {"rows": sum(files_detail.values())}
+    if partition_by:
+        counters["partitions"] = partitions
+    counters["files_detail"] = files_detail
+    counters["files"] = len(files_detail)
+    return counters

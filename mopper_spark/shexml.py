@@ -590,14 +590,6 @@ def _parse_object(txt: str, prefixes: dict[str, str]) -> ShapeObject:
 # --------------------------------------------------------------------------
 # translation to plan
 # --------------------------------------------------------------------------
-def _iri_template_map(prefix_iri: str, column: str) -> TermMap:
-    # '{' in the constant prefix would need escaping; prefix IRIs never
-    # contain braces in practice — refuse loudly rather than mis-template
-    if "{" in prefix_iri or "}" in prefix_iri:
-        raise ShexmlTranslateError(f"Brace in prefix IRI {prefix_iri!r}")
-    return TermMap(template=prefix_iri + "{" + column + "}", term_type="IRI")
-
-
 def _match_rules_json(doc: ShexmlDoc, matcher_name: str) -> list:
     rules_ = doc.matchers.get(matcher_name)
     if rules_ is None:

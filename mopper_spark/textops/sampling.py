@@ -63,21 +63,6 @@ def hash_split(
     return df.withColumn(out_col, expr)
 
 
-def split_thresholds(
-    splits: dict[str, float] | None = None,
-) -> list[tuple[str, int]]:
-    """(label, exclusive upper bucket bound) pairs — the exact constants
-    ``hash_split`` compiles, exposed so oracles/tests mirror them."""
-    if splits is None:
-        splits = {"train": 0.8, "val": 0.1, "test": 0.1}
-    total = sum(splits.values())
-    out, acc = [], 0.0
-    for label, w in splits.items():
-        acc += w / total
-        out.append((label, int(round(acc * BUCKETS))))
-    return out
-
-
 def deterministic_sample(
     df: DataFrame, key: str, rate: float, seed: str = "sample-v1"
 ) -> DataFrame:

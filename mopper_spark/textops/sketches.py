@@ -29,7 +29,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -84,12 +84,6 @@ def heavy_hitters(
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
     )
     return exact.filter(F.col("freq") * (k + 1) > F.lit(n))
-
-
-def tokens_of(df: DataFrame, text_col: str = "text") -> Column:
-    """Lower-cased whitespace tokens — the shared tokenization of the
-    analysis layer, exposed for sketch inputs."""
-    return F.explode(F.split(F.lower(F.col(text_col)), r"\s+"))
 
 
 def hll_registers(values: DataFrame, col: str) -> DataFrame:

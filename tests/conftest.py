@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from mopper_spark.session import get_spark
@@ -9,6 +11,26 @@ def spark():
     yield s
     # keep the session alive across the whole test run; stop at exit
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def catalog_builds(spark):
+    """Every ``__spark_entry__.queries()`` entry built once at sf0.001, as
+    ``name -> (column set, executed-plan string)``.  The catalog-wide
+    tests read this instead of each building all queries again; the
+    DataFrames themselves are dropped."""
+    from test_driver_contract import SF  # also puts the repo root on sys.path
+
+    import __spark_entry__ as entry_mod
+
+    if not os.path.isdir(SF):
+        pytest.skip("sf0.001 testdata not available")
+    builds = {}
+    for name, fn in entry_mod.queries().items():
+        df = fn(spark, SF)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        builds[name] = (set(df.columns), plan)
+    return builds
 
 
 def precision_recall(produced: set, golden: set) -> tuple[float, float]:

@@ -29,16 +29,15 @@ needs_testdata = pytest.mark.skipif(
 
 
 @needs_testdata
-def test_every_query_key_resolves_and_columns_match_oracle(spark):
+def test_every_query_key_resolves_and_columns_match_oracle(catalog_builds):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    assert set(oracles) <= set(queries), "oracle without a query"
+    assert set(oracles) <= set(catalog_builds), "oracle without a query"
     mismatches = []
     for name, sql in oracles.items():
-        spark_cols = set(queries[name](spark, SF).columns)
+        spark_cols = catalog_builds[name][0]
         oracle_cols = {
             d[0] for d in con.execute(f"SELECT * FROM ({sql}) LIMIT 0").description
         }

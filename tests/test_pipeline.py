@@ -1,5 +1,10 @@
 """Transcript→KG pipeline tests: extraction invariants, entity linking with
-gold clusters, connected components, checkpoint/resume idempotence."""
+gold clusters, connected components, checkpoint/resume idempotence and
+checkpoint counters."""
+
+import os
+import uuid
+from urllib.parse import unquote, urlparse
 
 import pandas as pd
 import pytest
@@ -7,6 +12,7 @@ from pyspark.sql import functions as F
 
 from mopper_spark.functions.encoding import pct_encode
 from mopper_spark.pipeline.canonicalize import canonical_map
+from mopper_spark.pipeline.checkpoint import CheckpointManager
 from mopper_spark.pipeline.cc import connected_components
 from mopper_spark.pipeline.extract import extract_mentions, extract_triples
 from mopper_spark.pipeline.job import run_pipeline
@@ -182,6 +188,84 @@ class TestResume:
         # changing params invalidates
         res3 = run_pipeline(spark, root, n_turns=151, n_convs=5)
         assert not any(m.get("skipped") for m in res3.metrics)
+
+
+class TestCheckpointCounters:
+    """Stage counters are read from the parquet footers of the write and
+    match what Spark jobs over the read-back would compute, at no job."""
+
+    @staticmethod
+    def _spark_counters(spark, data_path, partition_by):
+        """The counters as Spark jobs over the read-back compute them."""
+        out = spark.read.parquet(data_path)
+        ref = {"rows": out.count()}
+        if partition_by:
+            ref["partitions"] = {
+                "|".join(str(r[c]) for c in partition_by): r["count"]
+                for r in out.groupBy(*partition_by).count().collect()
+            }
+        abs_data = os.path.abspath(data_path)
+        ref["files_detail"] = {
+            os.path.relpath(unquote(urlparse(r["f"]).path), abs_data): r["count"]
+            for r in out.groupBy(F.input_file_name().alias("f")).count().collect()
+        }
+        ref["files"] = len(ref["files_detail"])
+        return ref
+
+    def test_escaped_partition_values_match_spark(self, spark, tmp_path):
+        values = F.array(*(F.lit(v) for v in ("a b", "x=y", "p/q")), F.lit(None))
+        df = spark.range(0, 90, 1, 3).select(
+            "id",
+            F.element_at(values, (F.col("id") % 4 + 1).cast("int")).alias("k"),
+            (F.floor(F.col("id") / 4) % 2).alias("j"),
+        )
+        res = CheckpointManager(spark, str(tmp_path)).stage(
+            "s", "fp", lambda: df, partition_by=["k", "j"]
+        )
+        got = {k: v for k, v in res.manifest["counters"].items() if k != "seconds"}
+        ref = self._spark_counters(spark, str(tmp_path / "s" / "data"), ["k", "j"])
+        assert got == ref
+        assert got["rows"] == 90 and len(got["partitions"]) == 8
+        assert got["files"] == 3 * 8  # every task wrote to every partition
+
+    def test_empty_stage_lists_its_zero_row_file(self, spark, tmp_path):
+        df = spark.range(0).withColumn("v", F.lit("x"))
+        res = CheckpointManager(spark, str(tmp_path)).stage("e", "fp", lambda: df)
+        c = res.manifest["counters"]
+        assert c["rows"] == 0 and c["files"] == 1
+        assert list(c["files_detail"].values()) == [0]
+        (name,) = c["files_detail"]
+        assert os.path.isfile(tmp_path / "e" / "data" / name)
+
+    @pytest.mark.parametrize("partition_by", [None, ["k"]])
+    def test_stage_runs_no_counter_job(self, spark, tmp_path, partition_by):
+        """A checkpointed stage runs the jobs of its write and of its
+        read-back and nothing more."""
+        sc = spark.sparkContext
+        df = spark.range(0, 200, 1, 4).withColumn("k", F.col("id") % 3)
+
+        def jobs_of(fn) -> int:
+            group = f"ckpt-jobs-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        def bare():
+            p = str(tmp_path / "bare")
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(p)
+            spark.read.parquet(p)
+
+        ckpt = CheckpointManager(spark, str(tmp_path / "ckpt"))
+        n_stage = jobs_of(lambda: ckpt.stage("s", "fp", lambda: df, partition_by))
+        assert n_stage == jobs_of(bare) > 0
 
 
 class TestOracleFixturePins:

@@ -66,15 +66,11 @@ def test_extraction_fully_native(transcripts):
     assert "Generate explode" in s
 
 
-def test_no_batch_eval_python_in_queries(spark):
+def test_no_batch_eval_python_in_queries(catalog_builds):
     """Every driver-contract query plan must stay Arrow-only."""
-    import __spark_entry__ as entry_mod
-
-    sf = "/root/testdata/sf0.001"
-    for name, fn in entry_mod.queries().items():
+    for name, (_, s) in catalog_builds.items():
         if name in ("entity_linking_transcripts",):  # orderBy collect-side
             continue
-        s = _plan_str(fn(spark, sf))
         assert "BatchEvalPython" not in s, f"{name} uses row-at-a-time Python"
         if name.startswith("rml_"):
             # the whole mapping-engine surface (UriEncode + Iri incl. the
