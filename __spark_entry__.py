@@ -7490,7 +7490,7 @@ def _q_kg_sameas_canonical(spark: SparkSession, sf: str) -> DataFrame:
     rewritten so every subject/object names its component's
     lexicographically-smallest representative and the sameAs statements
     are dropped.  Components come from the large/small-star CC over
-    xxhash64 node ids; the oracle replays with an undirected recursive
+    the IRI strings; the oracle replays with an undirected recursive
     reachability CTE and min-over-reachable."""
     from mopper_spark.pipeline.extract import extract_mentions, mention_triples
     from mopper_spark.pipeline.reasoning import OWL_SAMEAS, sameas_canonicalize

@@ -3,7 +3,10 @@
 Maps every normalized surface form to its component's canonical form (the
 lexicographically smallest member — deterministic under distribution) and
 builds the canonical entity IRI with the same URI-encoding function the
-extraction stage uses.
+extraction stage uses.  Connected components run on the ``norm`` strings
+themselves, so the component id already is that smallest member: no id
+dictionary, no join back, and two forms can never merge by a hash
+collision.
 
 The form dictionary is tiny relative to the corpus (distinct normalized
 mentions), so the final mention→canonical rewrite joins the mention stream
@@ -27,31 +30,19 @@ def canonical_map(forms: DataFrame, edges: DataFrame) -> DataFrame:
     Returns (norm, canonical_norm, canonical_iri); singleton forms map to
     themselves.
     """
-    ids = forms.select(
-        "norm", F.xxhash64("norm").alias("node")
+    # an edge counts only when both of its forms are in ``forms``
+    known = forms.select("norm")
+    linked = (
+        edges.join(known.withColumnRenamed("norm", "norm_a"), "norm_a", "left_semi")
+        .join(known.withColumnRenamed("norm", "norm_b"), "norm_b", "left_semi")
+        .select(F.col("norm_a").alias("u"), F.col("norm_b").alias("v"))
     )
-    edge_ids = (
-        edges.join(ids.withColumnRenamed("norm", "norm_a"), "norm_a")
-        .withColumnRenamed("node", "u")
-        .join(ids.withColumnRenamed("norm", "norm_b"), "norm_b")
-        .withColumnRenamed("node", "v")
-        .select("u", "v")
-    )
-    comp = connected_components(edge_ids)
-
-    # node id → component id → canonical member (lexicographic min of the
-    # member norms, NOT the min hash id: stable and human-auditable)
-    membership = ids.join(comp, ids.node == comp.node, "left").select(
-        "norm", F.coalesce("component", ids.node).alias("component")
-    )
-    canon = membership.groupBy("component").agg(
-        F.min("norm").alias("canonical_norm")
-    )
-    out = membership.join(canon, "component").select(
+    comp = connected_components(linked)
+    canon = F.coalesce("component", "norm")
+    return known.join(comp.withColumnRenamed("node", "norm"), "norm", "left").select(
         "norm",
-        "canonical_norm",
-        F.concat(
-            F.lit(EX + "entity/"), pct_encode_native(F.col("canonical_norm"))
-        ).alias("canonical_iri"),
+        canon.alias("canonical_norm"),
+        F.concat(F.lit(EX + "entity/"), pct_encode_native(canon)).alias(
+            "canonical_iri"
+        ),
     )
-    return out

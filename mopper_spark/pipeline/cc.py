@@ -14,8 +14,12 @@ even on path graphs, and hot components are handled by the groupBy's
 map-side partial aggregation.  Lineage is cut with ``localCheckpoint``
 every round (iterative plans otherwise grow unboundedly and re-execute).
 
-Node ids are int64; callers map strings → ids with ``xxhash64`` (stable,
-deterministic) and keep a dictionary to map back.
+Convergence: edges stay oriented child ``u`` > parent ``v`` and star steps
+preserve connectivity, so a round whose output is a star forest (no child
+in a second edge) is final: each center is its component's minimum.
+
+Node ids are of any one orderable type (``long``, ``string``, …): callers
+pass their natural keys, with no id dictionary and no hash to collide.
 """
 
 from __future__ import annotations
@@ -30,8 +34,11 @@ log = logging.getLogger(__name__)
 
 def _star(edges: DataFrame, large: bool) -> DataFrame:
     """One large- or small-star round over canonical (u, v) edges."""
-    # symmetrize: neighbourhood of u must include both directions
-    sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    # symmetrize: neighbourhood of u must include both directions (one scan
+    # of the input: a self-union would compute an uncheckpointed input twice)
+    flip = F.struct(F.col("v").alias("u"), F.col("u").alias("v"))
+    sym = edges.select(F.inline(F.array(F.struct("u", "v"), flip)))
+    # collect_set also drops the duplicate edges the previous step emits
     grouped = sym.groupBy("u").agg(F.collect_set("v").alias("nbrs"))
     m = F.least(F.col("u"), F.array_min("nbrs")).alias("m")
     if large:
@@ -47,43 +54,46 @@ def _star(edges: DataFrame, large: bool) -> DataFrame:
     out = grouped.select(m, F.explode(targets).alias("n")).filter(
         F.col("n") != F.col("m")
     )
-    return out.select(
-        F.greatest("n", "m").alias("u"), F.least("n", "m").alias("v")
-    ).distinct()
+    return out.select(F.greatest("n", "m").alias("u"), F.least("n", "m").alias("v"))
+
+
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when no child ``u`` of the distinct edges is in a second edge."""
+    roles = edges.select(F.col("u").alias("node"), F.lit(True).alias("child")).union(
+        edges.select(F.col("v").alias("node"), F.lit(False).alias("child"))
+    )
+    bad = (
+        roles.groupBy("node")
+        .agg(F.max("child").alias("child"), F.count("*").alias("n"))
+        .filter(F.col("child") & (F.col("n") > 1))
+    )
+    return bad.isEmpty()
 
 
 def connected_components(
     edges: DataFrame, max_iter: int = 25
 ) -> DataFrame:
-    """Edge list (u:int64, v:int64) → (node:int64, component:int64).
+    """Edge list (u, v) → (node, component), ids of one orderable type.
 
-    ``component`` is the minimum node id in the component.
+    ``component`` is the minimum node id in the component; every node of a
+    non-self-loop edge appears once, roots included.  A run that hits
+    ``max_iter`` (logged as a warning) returns the unfinished forest.
     """
-    cur = (
-        edges.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    cur = edges.select(
+        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+    ).filter(F.col("u") != F.col("v"))
     for i in range(max_iter):
-        after_large = _star(cur, large=True)
-        after_small = _star(after_large, large=False).localCheckpoint()
-        # converged when the edge set is a stable star forest: every u maps
-        # to exactly one v and no changes from the previous round
-        changed = after_small.exceptAll(cur).limit(1).count()
-        cur = after_small
-        if changed == 0:
+        cur = _star(_star(cur, large=True), large=False).distinct().localCheckpoint()
+        if _is_star_forest(cur):
             log.info("connected_components converged after %d rounds", i + 1)
             break
     else:
         log.warning("connected_components hit max_iter=%d", max_iter)
 
+    # in a star forest children and roots are disjoint and each child has
+    # one parent, so the two parts need no join or dedup against each other
     membership = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = cur.select(F.col("v").alias("node")).distinct().withColumn(
         "component", F.col("node")
     )
-    return membership.union(
-        roots.join(membership.select("node"), "node", "left_anti")
-    ).distinct()
+    return membership.union(roots)

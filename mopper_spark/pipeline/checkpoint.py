@@ -13,7 +13,10 @@ tmp+rename), and records lineage:
   ``data`` dir to its footer row count, ``rows`` is their sum, ``files``
   their number, and ``partitions`` sums them per partition directory,
   keyed by the unescaped ``col=value`` values joined with ``"|"``,
-- wall-clock duration.
+- wall-clock duration,
+- the read-back schema (the written one, partition columns last, as Spark
+  reads it back): every read-back is given it, so none runs a
+  schema-inference job; a manifest without one counts as incomplete.
 
 Atomicity model: Spark's parquet writer is itself atomic-ish per directory
 (_SUCCESS marker); the manifest is only written after a successful write,
@@ -33,6 +36,7 @@ from urllib.parse import unquote
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # directory name Spark writes for a NULL (or empty-string) partition value
 _NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
@@ -78,9 +82,11 @@ class CheckpointManager:
             man
             and man.get("fingerprint") == fingerprint
             and man.get("status") == "complete"
+            and "schema" in man
             and os.path.exists(os.path.join(data_path, "_SUCCESS"))
         ):
-            df = self.spark.read.parquet(data_path)
+            schema = StructType.fromJson(man["schema"])
+            df = self.spark.read.schema(schema).parquet(data_path)
             result = StageResult(name, df, skipped=True, manifest=man)
             self.metrics.append({"stage": name, "skipped": True, **man["counters"]})
             return result
@@ -92,8 +98,12 @@ class CheckpointManager:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_path)
 
+        part = partition_by or []
+        schema = StructType(
+            [f for f in df.schema if f.name not in part] + [df.schema[c] for c in part]
+        )
         # lazy read-back: cuts the lineage for the stages downstream
-        out = self.spark.read.parquet(data_path)
+        out = self.spark.read.schema(schema).parquet(data_path)
         counters = _footer_counters(data_path, partition_by)
         counters["seconds"] = round(time.time() - t0, 3)
 
@@ -101,6 +111,7 @@ class CheckpointManager:
             "stage": name,
             "fingerprint": fingerprint,
             "status": "complete",
+            "schema": out.schema.jsonValue(),
             "counters": counters,
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }

@@ -458,41 +458,20 @@ def sameas_canonicalize(
     with an IRI name must not be smushed.
 
     Scale shape: components via the large/small-star CC (pipeline/cc.py)
-    over xxhash64 node ids (same collision stance as linking); the
-    (name -> representative) map is joined back — no broadcast hint, the
-    map is corpus-sized in the worst case and AQE picks broadcast when it
-    is small.  Rewrite = two left equi-joins + one distinct.
+    run on the names themselves, so the component id is the
+    representative; the (name -> representative) map is joined back — no
+    broadcast hint, the map is corpus-sized in the worst case and AQE
+    picks broadcast when it is small.  Rewrite = two left equi-joins + one
+    distinct.
     """
-    pairs = (
-        triples.filter(F.col("pred") == sameas_pred)
-        .select(F.col("subj").alias("a"), F.col("obj").alias("b"))
-        .distinct()
+    comp = connected_components(
+        triples.filter(F.col("pred") == sameas_pred).select(
+            F.col("subj").alias("u"), F.col("obj").alias("v")
+        )
     )
-    edges = pairs.select(
-        F.xxhash64("a").alias("u"), F.xxhash64("b").alias("v")
-    )
-    comp = connected_components(edges)
-    names = (
-        pairs.select(F.col("a").alias("s"))
-        .unionByName(pairs.select(F.col("b").alias("s")))
-        .distinct()
-        .withColumn("id", F.xxhash64("s"))
-    )
-    members = names.join(comp, names["id"] == comp["node"]).select(
-        "s", "component"
-    )
-    reps = members.groupBy("component").agg(F.min("s").alias("rep"))
-    mapping = members.join(reps, "component").select(
-        F.col("s").alias("node_s"), "rep"
-    )
-
     rest = triples.filter(F.col("pred") != F.lit(sameas_pred))
-    m_subj = mapping.select(
-        F.col("node_s").alias("subj"), F.col("rep").alias("_srep")
-    )
-    m_obj = mapping.select(
-        F.col("node_s").alias("obj"), F.col("rep").alias("_orep")
-    )
+    m_subj = comp.select(F.col("node").alias("subj"), F.col("component").alias("_srep"))
+    m_obj = comp.select(F.col("node").alias("obj"), F.col("component").alias("_orep"))
     joined = rest.join(m_subj, "subj", "left").join(m_obj, "obj", "left")
     obj_hit = F.col("_orep").isNotNull()
     if "okind" in triples.columns:

@@ -200,6 +200,9 @@ def assign_vectors_np(
     Scale bound: the centroid table is collected to the driver and
     closure-broadcast (K·d doubles — ~50 MB at K=100k, d=64; beyond
     that, route hierarchically or shard the centroid blocks).
+
+    Raises ``ValueError`` on an empty centroid table (there is no
+    nearest centroid to assign).
     """
     id_type = next(
         f.dataType.simpleString()
@@ -207,6 +210,8 @@ def assign_vectors_np(
         if f.name == id_col
     )
     rows = centroids.orderBy("cid").collect()
+    if not rows:
+        raise ValueError("assign_vectors_np: the centroid table is empty")
     cids = np.array([r["cid"] for r in rows], dtype=np.int64)
     cmat = np.array([list(r["cvec"]) for r in rows], dtype=np.float64)
     scale = float(S_DIST)

@@ -339,3 +339,12 @@ def test_np_assign_bit_identical(spark):
         for r in assign_vectors_np(emb, cents).collect()
     }
     assert jvm == nps
+
+
+def test_np_assign_empty_centroids_raises(spark):
+    from mopper_spark.textops.ivf import assign_vectors_np
+
+    emb = spark.createDataFrame([(1, [0.0, 1.0])], "vec_id long, embedding array<float>")
+    cents = spark.createDataFrame([], "cid int, cvec array<double>")
+    with pytest.raises(ValueError, match="centroid table is empty"):
+        assign_vectors_np(emb, cents)

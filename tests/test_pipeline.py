@@ -2,13 +2,17 @@
 gold clusters, connected components, checkpoint/resume idempotence and
 checkpoint counters."""
 
+import json
+import logging
 import os
+import random
 import uuid
 from urllib.parse import unquote, urlparse
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mopper_spark.functions.encoding import pct_encode
 from mopper_spark.pipeline.canonicalize import canonical_map
@@ -161,6 +165,82 @@ class TestConnectedComponents:
         got = {(r.node, r.component) for r in connected_components(edges).collect()}
         assert got == {(7, 3), (3, 3)}  # self-loop drops out entirely
 
+    @staticmethod
+    def _min_labels(pairs) -> set:
+        """Union-find min-label components of the non-self-loop edges."""
+        parent: dict = {}
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for u, v in pairs:
+            if u == v:
+                continue
+            parent.setdefault(u, u)
+            parent.setdefault(v, v)
+            ru, rv = find(u), find(v)
+            parent[max(ru, rv)] = min(ru, rv)
+        return {(x, find(x)) for x in parent}
+
+    @pytest.mark.parametrize("kind", ["long", "string"])
+    @pytest.mark.parametrize("seed", [1, 2, 3])
+    def test_random_graphs_match_union_find(self, spark, kind, seed):
+        rng = random.Random(seed)
+        ids = rng.sample(range(10_000), 60)
+        if kind == "string":
+            ids = [f"{rng.choice('abcxyz')}{i}" for i in ids]
+        pairs = [tuple(rng.sample(ids, 2)) for _ in range(45)]
+        pairs += [(v, u) for u, v in rng.sample(pairs, 10)]  # both orientations
+        pairs += rng.sample(pairs, 10)  # duplicates
+        pairs += [(x, x) for x in rng.sample(ids, 5)]  # self-loops
+        edges = spark.createDataFrame(pairs, f"u {kind}, v {kind}")
+        got = [(r.node, r.component) for r in connected_components(edges).collect()]
+        assert len({node for node, _ in got}) == len(got)  # each node once
+        assert set(got) == self._min_labels(pairs)
+
+    def test_long_path(self, spark):
+        # a path is the worst case for rounds; labels shuffled along it
+        labels = random.Random(7).sample(range(64), 64)
+        pairs = list(zip(labels, labels[1:]))
+        edges = spark.createDataFrame(pairs, "u long, v long")
+        got = {(r.node, r.component) for r in connected_components(edges).collect()}
+        assert got == {(x, 0) for x in range(64)}
+
+    def test_empty_edge_set(self, spark):
+        edges = spark.createDataFrame([], "u string, v string")
+        assert connected_components(edges).collect() == []
+
+    def test_star_converges_in_one_round(self, spark, caplog):
+        caplog.set_level(logging.INFO, logger="mopper_spark.pipeline.cc")
+        pairs = [(0, i) for i in range(1, 11)] + [(i, 0) for i in range(11, 21)]
+        edges = spark.createDataFrame(pairs, "u long, v long")
+        got = {(r.node, r.component) for r in connected_components(edges).collect()}
+        assert got == {(i, 0) for i in range(21)}
+        rounds = [
+            r.getMessage() for r in caplog.records
+            if r.name == "mopper_spark.pipeline.cc"
+        ]
+        assert rounds == ["connected_components converged after 1 rounds"]
+
+    def test_canonical_map_drops_edges_leaving_forms(self, spark):
+        """An edge with an endpoint outside ``forms`` takes no part: ``x``
+        does not bridge ``a`` and ``c``."""
+        forms = spark.createDataFrame([("b",), ("a",), ("c",), ("d",)], "norm string")
+        edges = spark.createDataFrame(
+            [("a", "x"), ("x", "c"), ("c", "d"), ("x", "y")], "norm_a string, norm_b string"
+        )
+        got = sorted(map(tuple, canonical_map(forms, edges).collect()))
+        ent = "http://example.com/entity/"
+        assert got == [
+            ("a", "a", ent + "a"),
+            ("b", "b", ent + "b"),
+            ("c", "c", ent + "c"),
+            ("d", "c", ent + "c"),
+        ]
+
 
 class TestResume:
     def test_mid_run_kill_then_resume_identical(self, spark, tmp_path):
@@ -239,8 +319,9 @@ class TestCheckpointCounters:
 
     @pytest.mark.parametrize("partition_by", [None, ["k"]])
     def test_stage_runs_no_counter_job(self, spark, tmp_path, partition_by):
-        """A checkpointed stage runs the jobs of its write and of its
-        read-back and nothing more."""
+        """A checkpointed stage runs the jobs of its write and nothing more:
+        no counter job, and its read-back (also when the stage is skipped)
+        is given its schema, so no schema-inference job."""
         sc = spark.sparkContext
         df = spark.range(0, 200, 1, 4).withColumn("k", F.col("id") % 3)
 
@@ -261,11 +342,36 @@ class TestCheckpointCounters:
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(p)
-            spark.read.parquet(p)
 
         ckpt = CheckpointManager(spark, str(tmp_path / "ckpt"))
         n_stage = jobs_of(lambda: ckpt.stage("s", "fp", lambda: df, partition_by))
         assert n_stage == jobs_of(bare) > 0
+        skip = []
+        assert jobs_of(lambda: skip.append(ckpt.stage("s", "fp", lambda: df, partition_by))) == 0
+        assert skip[0].skipped
+
+    def test_manifest_schema_is_the_inferred_schema(self, spark, tmp_path):
+        """Every pipeline stage's recorded read-back schema, the partitioned
+        ``graph`` included, is the one ``spark.read.parquet`` infers."""
+        root = str(tmp_path / "ckpt")
+        res = run_pipeline(spark, root, n_turns=150, n_convs=5)
+        assert len(res.metrics) == 6
+        for m in res.metrics:
+            data = os.path.join(root, m["stage"], "data")
+            with open(os.path.join(root, m["stage"], "manifest.json")) as f:
+                recorded = StructType.fromJson(json.load(f)["schema"])
+            assert recorded == spark.read.parquet(data).schema, m["stage"]
+
+    def test_manifest_without_schema_recomputes(self, spark, tmp_path):
+        ckpt = CheckpointManager(spark, str(tmp_path))
+        df = spark.range(5)
+        ckpt.stage("s", "fp", lambda: df)
+        path = tmp_path / "s" / "manifest.json"
+        man = json.loads(path.read_text())
+        del man["schema"]
+        path.write_text(json.dumps(man))
+        res = ckpt.stage("s", "fp", lambda: df)
+        assert not res.skipped and "schema" in res.manifest
 
 
 class TestOracleFixturePins:
