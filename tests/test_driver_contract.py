@@ -76,8 +76,7 @@ def test_oracle_fetch_path_parity():
 
     con = duckdb.connect()
     # this runs next to the session's Spark JVM: bound what DuckDB's buffer
-    # manager holds (the kg_owl_inference oracle's recursive CTEs still
-    # peak near 8 GB outside it, with DuckDB 1.0)
+    # manager holds
     con.execute("SET memory_limit='4GB'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
@@ -89,8 +88,11 @@ def test_oracle_fetch_path_parity():
 
     divergent = []
     for name, sql in entry_mod.oracle_sql().items():
-        native = con.execute(sql).fetchall()
-        df = con.execute(sql).fetchdf()
+        # each oracle runs once; both fetch paths read its result table,
+        # whose column types are the query's own
+        con.execute(f"CREATE OR REPLACE TEMP TABLE oracle_out AS {sql}")
+        native = con.execute("SELECT * FROM oracle_out").fetchall()
+        df = con.execute("SELECT * FROM oracle_out").fetchdf()
         pandas_rows = [
             tuple(None if (isinstance(v, float) and math.isnan(v)) else v for v in r)
             for r in df.itertuples(index=False, name=None)

@@ -36,6 +36,33 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _exact_cosine_pairs(df, threshold: float) -> set:
+    """Every ``(id_a < id_b)`` pair of ``df``'s ``(vec_id, embedding)`` rows
+    with ``cosine_native(a, b) >= threshold``, computed all-pairs in numpy.
+
+    It replays ``cosine_native``'s arithmetic step for step in float64
+    (products summed left to right from 0.0, ``sqrt`` of the left-to-right
+    sums of squares, 0.0 when a norm is 0), so each cosine is bit-identical
+    to the Spark expression's; only the O(n²) pair loop leaves the JVM.
+    """
+    pdf = df.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    ).toPandas()
+    ids = pdf["vec_id"].to_numpy()
+    v = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+    dot = np.zeros((len(ids), len(ids)))
+    sq = np.zeros(len(ids))
+    for k in range(v.shape[1]):
+        dot = dot + v[:, k][:, None] * v[:, k][None, :]
+        sq = sq + v[:, k] * v[:, k]
+    norm = np.sqrt(sq)
+    nz = (norm[:, None] > 0) & (norm[None, :] > 0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = np.where(nz, dot / (norm[:, None] * norm[None, :]), 0.0)
+    ia, ib = np.nonzero((cos >= threshold) & (ids[:, None] < ids[None, :]))
+    return {(int(ids[a]), int(ids[b])) for a, b in zip(ia, ib)}
+
+
 class TestDedup:
     def test_exact(self, docs):
         out = exact_dedup(docs).collect()
@@ -159,22 +186,8 @@ class TestDedupScaleGuards:
         """Same pinning for dedup_embedding: banded hyperplane LSH at the
         gate parameters (2 planes × 24 bands, threshold 0.4) must find every
         exact-cosine pair."""
-        from mopper_spark.textops.similarity import cosine_native
-
         emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-        t = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        a, b = t.alias("a"), t.alias("b")
-        exact = {
-            (r.id_a, r.id_b)
-            for r in a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-            .select(
-                F.col("a.vec_id").alias("id_a"),
-                F.col("b.vec_id").alias("id_b"),
-                cosine_native(F.col("a.v"), F.col("b.v")).alias("c"),
-            )
-            .filter(F.col("c") >= 0.4)
-            .collect()
-        }
+        exact = _exact_cosine_pairs(emb, 0.4)
         lsh = {
             (r.id_a, r.id_b)
             for r in embedding_near_dup_pairs(
@@ -190,26 +203,12 @@ class TestDedupScaleGuards:
         r=1, B=7) and the sf0.1 bench fixture (plans r=2, B=14) — the
         planned path is the scale default, so its recall contract is
         pinned at both operating points."""
-        from mopper_spark.textops.similarity import cosine_native, lsh_band_plan
+        from mopper_spark.textops.similarity import lsh_band_plan
 
         for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
             emb = spark.read.parquet(f"{sf}/embeddings.parquet")
             r, bands = lsh_band_plan(emb.count(), 0.4, target_recall=0.999)
-            t = emb.select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            )
-            a, b = t.alias("a"), t.alias("b")
-            exact = {
-                (x.id_a, x.id_b)
-                for x in a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-                .select(
-                    F.col("a.vec_id").alias("id_a"),
-                    F.col("b.vec_id").alias("id_b"),
-                    cosine_native(F.col("a.v"), F.col("b.v")).alias("c"),
-                )
-                .filter(F.col("c") >= 0.4)
-                .collect()
-            }
+            exact = _exact_cosine_pairs(emb, 0.4)
             lsh = {
                 (x.id_a, x.id_b)
                 for x in embedding_near_dup_pairs(
@@ -226,22 +225,8 @@ class TestDedupScaleGuards:
         corpus construction changes, a dedup_embedding_deep gate failure
         means a RECALL GAP, not an engine bug — re-validate here first."""
         import __spark_entry__ as entry_mod
-        from mopper_spark.textops.similarity import cosine_native
-
         corpus = entry_mod._dedup_deep_corpus(spark, "/root/testdata/sf0.001")
-        t = corpus.select("vec_id", F.col("embedding").alias("v"))
-        a, b = t.alias("a"), t.alias("b")
-        exact = {
-            (r.id_a, r.id_b)
-            for r in a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-            .select(
-                F.col("a.vec_id").alias("id_a"),
-                F.col("b.vec_id").alias("id_b"),
-                cosine_native(F.col("a.v"), F.col("b.v")).alias("c"),
-            )
-            .filter(F.col("c") >= 0.9)
-            .collect()
-        }
+        exact = _exact_cosine_pairs(corpus, 0.9)
         lsh = {
             (r.id_a, r.id_b)
             for r in embedding_near_dup_pairs(
