@@ -453,6 +453,10 @@ def wait_load_settle(max_load: float, timeout_s: float = 300.0) -> float:
     return os.getloadavg()[0]
 
 
+# draws per scaling leg, the same for both legs on every run
+SCALING_DRAWS = 3
+
+
 def run_scaling(lo: int, hi: int, scaling_turns: int, cpus: int) -> dict:
     """The two-cluster-size proxy, fully process-isolated.
 
@@ -578,47 +582,28 @@ def run_scaling(lo: int, hi: int, scaling_turns: int, cpus: int) -> dict:
             _leg_result(p.args, p.returncode, out, err) for p, out, err in done
         )
 
-    # SYMMETRIC estimator (r2 ADVICE fix): BOTH legs are drawn twice,
-    # interleaved (hi, lo, hi, lo) so each leg's draws are separated
-    # in time, and each leg's statistic is the max of its two draws'
-    # window-medians.  Ambient hypervisor steal is one-sided noise
-    # (it only ever slows reps), so per-leg max-of-draws estimates the
-    # un-stolen steady state — and applying it to numerator AND
-    # denominator means a noisy draw can no longer inflate the ratio
-    # (the r2 asymmetry: hardened hi over single-draw lo).  Each draw
-    # is still a median over 3 consecutive reps, never a single rep.
+    # SYMMETRIC estimator (r2 ADVICE fix): BOTH legs are drawn
+    # SCALING_DRAWS times, interleaved (hi, lo, hi, lo, ...) so each leg's
+    # draws are separated in time, and each leg's statistic is the max of
+    # its draws' window-medians.  Ambient hypervisor steal is one-sided
+    # noise (it only ever slows reps), so per-leg max-of-draws estimates
+    # the un-stolen steady state — and applying it to numerator AND
+    # denominator means a noisy draw can no longer inflate the ratio.  The
+    # draw count is fixed: drawing again only after a low ratio would make
+    # the statistic depend on what it measured.  Each draw is still a
+    # median over 3 consecutive reps, never a single rep.
     #
     # The hi leg is hi//lo CONCURRENT lo-core executor JVMs (see
     # run_leg_multi) unless BENCH_SCALING_SINGLE_JVM=1 asks for the old
     # one-big-local[hi] form.
     single_jvm = os.environ.get("BENCH_SCALING_SINGLE_JVM") == "1"
     n_exec = max(1, hi // lo)
-
-    def draw_hi() -> float:
-        return run_leg(hi) if single_jvm else run_leg_multi(n_exec, lo)
-
-    hi_draws = [draw_hi()]
-    lo_draws = [run_leg(lo)]
-    hi_draws.append(draw_hi())
-    lo_draws.append(run_leg(lo))
-    ratio = hi / lo
-
-    def eff_now() -> float:
-        return max(hi_draws) / max(lo_draws) / ratio
-
-    # adaptive third draw: steal is one-sided, so a sub-0.8 two-draw ratio
-    # is evidence of a contaminated draw, not of the job — re-draw each leg
-    # once more (still symmetric: BOTH legs get the extra draw) and keep
-    # the per-leg max.  Bounded at three draws; if it still fails, it
-    # fails loudly in the artifact.
-    if eff_now() < 0.8:
-        print(
-            f"# scaling: two-draw efficiency {eff_now():.3f} < 0.8 — "
-            "drawing a third round for both legs",
-            file=sys.stderr,
-        )
-        hi_draws.append(draw_hi())
+    hi_draws: list[float] = []
+    lo_draws: list[float] = []
+    for _ in range(SCALING_DRAWS):
+        hi_draws.append(run_leg(hi) if single_jvm else run_leg_multi(n_exec, lo))
         lo_draws.append(run_leg(lo))
+    ratio = hi / lo
     throughput[f"turns_per_sec@{lo}"] = round(max(lo_draws), 1)
     throughput[f"turns_per_sec@{hi}"] = round(max(hi_draws), 1)
     print(
@@ -638,6 +623,7 @@ def run_scaling(lo: int, hi: int, scaling_turns: int, cpus: int) -> dict:
     throughput["scaling_mode"] = (
         "single-jvm" if single_jvm else f"{n_exec}x-executor-jvms"
     )
+    throughput["scaling_draws_per_leg"] = SCALING_DRAWS
     return throughput
 
 

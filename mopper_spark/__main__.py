@@ -9,6 +9,16 @@ model (mopper_options.rs:33-36).
 
 Relative source paths resolve against the mapping file's directory (the
 reference resolves via ``working_dir_hint``, lib.rs:244-263).
+
+The sink: the reference sends every statement to one sequential writer
+(writer_sink.rs:57-66).  Here each target's statements are written by one
+parallel Spark text write into a local staging directory, one part file per
+partition, and the driver then concatenates the part files into the
+destination in partition order.  The bytes are those of a sequential writer
+over the same rows: each statement followed by ``\n``, UTF-8.  The driver
+reads what the executors wrote, so the session's master must be local
+(``get_spark`` always builds one); a session adopted from elsewhere with a
+cluster master is refused with ``NonLocalMasterError``.
 """
 
 from __future__ import annotations
@@ -16,7 +26,15 @@ from __future__ import annotations
 import argparse
 import logging
 import os
+import pathlib
+import shutil
 import sys
+import tempfile
+
+
+class NonLocalMasterError(RuntimeError):
+    """The session's executors may run on other hosts, where the driver
+    cannot read the part files they write."""
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -41,6 +59,28 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument("-d", "--deduplicate", action="store_true",
                     help="remove duplicate triples/quads per sink")
     return ap
+
+
+def _write_parts(statements, directory: str) -> list[str]:
+    """Write the non-empty statements as text under ``directory``; returns
+    the part files in partition order.  The text writer ends every value
+    with ``\n``."""
+    from pyspark.sql import functions as F
+
+    col = F.col(statements.columns[0])
+    statements.where(col.isNotNull() & (col != "")).write.text(
+        pathlib.Path(directory).as_uri()
+    )
+    names = [n for n in os.listdir(directory) if n.startswith("part-")]
+    # part-<partition>-<uuid>-c<file>.txt
+    names.sort(key=lambda n: (int(n.split("-")[1]), n))
+    return [os.path.join(directory, n) for n in names]
+
+
+def _concat(parts: list[str], out) -> None:
+    for part in parts:
+        with open(part, "rb") as src:
+            shutil.copyfileobj(src, out)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -76,24 +116,29 @@ def main(argv: list[str] | None = None) -> int:
     out_path = args.force_to_file
     written: set[str] = set()  # first write per path this run truncates —
     # appending to a file left by a PREVIOUS run would duplicate output
+    staging = tempfile.mkdtemp(prefix="mopper-sink-")
     try:
-        for target in run_plan(plan, spark, options):
-            # Stream partition-by-partition: the driver holds at most one
-            # partition of serialized statements, never the whole output
-            # (the reference's sink is likewise a single sequential writer,
-            # writer_sink.rs:57-66 — same contract, bounded memory).
-            rows = target.statements.toLocalIterator(prefetchPartitions=True)
-            lines = (ln for r in rows if r[0] for ln in r[0].split("\n"))
+        master = spark.sparkContext.master
+        if not master.startswith("local"):
+            raise NonLocalMasterError(
+                f"the command line needs a local master, got {master!r}: "
+                "the driver concatenates the part files the executors write"
+            )
+        for i, target in enumerate(run_plan(plan, spark, options)):
+            parts = _write_parts(target.statements, os.path.join(staging, str(i)))
             target_type = target.config.get("target_type", "StdOut")
             if out_path or (target_type == "File" and not args.force_std_out):
                 path = out_path or target.config.get("path", "output.nq")
-                mode = "a" if path in written else "w"
+                mode = "ab" if path in written else "wb"
                 written.add(path)
                 with open(path, mode) as f:
-                    f.writelines(ln + "\n" for ln in lines)
+                    _concat(parts, f)
             else:
-                sys.stdout.writelines(ln + "\n" for ln in lines)
+                sys.stdout.flush()
+                _concat(parts, sys.stdout.buffer)
+                sys.stdout.buffer.flush()
     finally:
+        shutil.rmtree(staging, ignore_errors=True)
         spark.stop()
     return 0
 

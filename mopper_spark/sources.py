@@ -15,6 +15,7 @@ version of the reference's projection-at-scan (``csv_file.rs:71-98``).
 
 from __future__ import annotations
 
+import collections
 import logging
 import os
 import re
@@ -523,6 +524,46 @@ def _xml_iterate(
     return kv.select([F.col("kv").getItem(k).alias(k) for k in keys])
 
 
+# Hadoop picks a decompression codec from these suffixes
+_CODEC_SUFFIXES = (".gz", ".bz2", ".deflate", ".lz4", ".snappy", ".zst")
+
+
+def _csv_header(path: str) -> list[str] | None:
+    """The header record of a CSV file, read on the driver the way Spark's
+    header inference reads it (UTF-8, a BOM dropped, lines of spaces only
+    skipped), so the schema needs no inference job.
+
+    ``None`` where Spark's own parse must decide: a header line holding a
+    quote (Spark's CSV escaping differs from every ``csv`` dialect: it keeps
+    ``"a""b"`` verbatim and reads ``"a\\"b"`` as ``a"b``), a compressed
+    file, or bytes that are not UTF-8.  A file of blank lines has the empty
+    header ``[]``.
+    """
+    if path.lower().endswith(_CODEC_SUFFIXES):
+        return None
+    try:
+        with open(path, encoding="utf-8-sig", newline="") as f:
+            for line in f:
+                line = line.rstrip("\r\n")
+                if line.strip(" "):
+                    return None if '"' in line else line.split(",")
+    except UnicodeDecodeError:
+        return None
+    return []
+
+
+def _safe_header(names: list[str], case_sensitive: bool) -> list[str]:
+    """Spark's ``CSVUtils.makeSafeHeader``: an empty name becomes ``_c{i}``,
+    a duplicated name (case-insensitively unless ``case_sensitive``) gets
+    its index appended."""
+    key = (lambda n: n) if case_sensitive else str.lower
+    seen = collections.Counter(key(n) for n in names if n)
+    return [
+        f"_c{i}" if not n else f"{n}{i}" if seen[key(n)] > 1 else n
+        for i, n in enumerate(names)
+    ]
+
+
 def resolve_source(
     spark: SparkSession,
     config: dict,
@@ -580,7 +621,15 @@ def resolve_source(
             elif os.path.isdir(resolved):
                 df = _all_string(spark.read.parquet(resolved))
             elif ref_form == "CSVRows":
-                df = spark.read.option("header", "true").csv(resolved)
+                reader = spark.read.option("header", "true")
+                header = _csv_header(resolved)
+                if header is not None:
+                    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+                    reader = reader.schema(StructType([
+                        StructField(n, StringType())
+                        for n in _safe_header(header, case_sensitive)
+                    ]))
+                df = reader.csv(resolved)
             elif ref_form == "JSONPath":
                 # beyond reference parity (its README lists JSON as
                 # roadmap-only): iterate a JSON document with a simple

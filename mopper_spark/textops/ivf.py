@@ -180,7 +180,8 @@ def assign_vectors_np(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """``assign_vectors``, Arrow-vectorized — BIT-IDENTICAL output.
+    """``assign_vectors``, Arrow-vectorized — bit-identical output, except
+    at half-ulp ties (below).
 
     The JVM path's n·K·d distance evaluation runs through Catalyst
     higher-order functions (zip_with/aggregate), which are interpreted
@@ -196,6 +197,15 @@ def assign_vectors_np(
 
     Ties go to the smallest cid (ascending-cid scan with strict-less
     update — the same ``min(struct(dist_fp, cid))`` rule).
+
+    Not bit-identical: an element whose scaled square ``t`` lies within
+    half an ulp below an ``m + 0.5`` boundary.  ``t + 0.5`` then rounds up
+    to ``m + 1`` in double arithmetic, so the floor gives ``m + 1`` where
+    Spark's decimal HALF_UP gives ``m`` (``0.49999999999999994`` is the
+    smallest case).  Such a term moves a distance by one fixed-point unit.
+
+    Every embedding must be non-NULL with the centroids' dimension; a
+    violating row raises ``ValueError`` naming its ``vec_id``.
 
     Scale bound: the centroid table is collected to the driver and
     closure-broadcast (K·d doubles — ~50 MB at K=100k, d=64; beyond
@@ -225,6 +235,16 @@ def assign_vectors_np(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            dims = pdf["vec"].map(lambda a: -1 if a is None else len(a))
+            bad = (dims != cmat.shape[1]).to_numpy()
+            if bad.any():
+                i = int(np.argmax(bad))
+                what = "NULL" if dims.iat[i] < 0 else f"of dimension {dims.iat[i]}"
+                raise ValueError(
+                    f"assign_vectors_np: vec_id {pdf['vec_id'].iat[i]}: "
+                    f"embedding is {what}, the centroids have dimension "
+                    f"{cmat.shape[1]}"
+                )
             x = np.stack([np.asarray(a, dtype=np.float64) for a in pdf["vec"]])
             best_d = None
             best_c = None

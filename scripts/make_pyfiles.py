@@ -1,10 +1,11 @@
 """Build the --py-files artifact: dist/mopper_spark.zip.
 
-Usage: python scripts/make_pyfiles.py  →  dist/mopper_spark.zip
+Usage: python scripts/make_pyfiles.py [OUT]  →  OUT (default dist/mopper_spark.zip)
 Ship with:  spark-submit --py-files dist/mopper_spark.zip jobs/kg_job.py …
 """
 
 import os
+import sys
 import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -26,4 +27,4 @@ def build(out: str | None = None) -> str:
 
 
 if __name__ == "__main__":
-    print(build())
+    print(build(sys.argv[1] if len(sys.argv) > 1 else None))

@@ -348,3 +348,20 @@ def test_np_assign_empty_centroids_raises(spark):
     cents = spark.createDataFrame([], "cid int, cvec array<double>")
     with pytest.raises(ValueError, match="centroid table is empty"):
         assign_vectors_np(emb, cents)
+
+
+@pytest.mark.parametrize(
+    "embedding, what",
+    [(None, "embedding is NULL"), ([1.0, 2.0, 3.0], "embedding is of dimension 3")],
+    ids=["null", "ragged"],
+)
+def test_np_assign_bad_embedding_names_vec_id(spark, embedding, what):
+    from mopper_spark.textops.ivf import assign_vectors_np
+
+    emb = spark.createDataFrame(
+        [(1, [0.0, 1.0]), (7, embedding), (2, [1.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    ).coalesce(1)
+    cents = spark.createDataFrame([(0, [0.0, 0.0])], "cid int, cvec array<double>")
+    with pytest.raises(Exception, match=f"vec_id 7: {what}, the centroids have dimension 2"):
+        assign_vectors_np(emb, cents).collect()

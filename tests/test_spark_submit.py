@@ -1,9 +1,10 @@
 """End-to-end spark-submit --py-files exercise (the north-rule ship shape).
 
-Runs the real ``spark-submit`` binary with the built ``dist/mopper_spark.zip``
-artifact in a SEPARATE JVM/Python process — proving executors resolve the
-package from the zip alone (no repo PYTHONPATH), per-stage lineage lands in
-the checkpoint manifests, and a re-run resumes (skips every stage).
+Runs the real ``spark-submit`` binary with a ``mopper_spark.zip`` artifact,
+built from the current sources once per module, in a SEPARATE JVM/Python
+process — proving executors resolve the package from the zip alone (no repo
+PYTHONPATH), per-stage lineage lands in the checkpoint manifests, and a
+re-run resumes (skips every stage).
 """
 import json
 import os
@@ -17,16 +18,22 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 
 
-@pytest.mark.skipif(
-    not os.path.exists(SPARK_SUBMIT), reason="spark-submit binary not available"
-)
-def test_spark_submit_pyfiles_job_and_resume(tmp_path):
+@pytest.fixture(scope="module")
+def zip_path(tmp_path_factory):
+    """The --py-files artifact, built from the current sources."""
+    out = str(tmp_path_factory.mktemp("dist") / "mopper_spark.zip")
     subprocess.run(
-        [sys.executable, os.path.join(REPO, "scripts", "make_pyfiles.py")],
+        [sys.executable, os.path.join(REPO, "scripts", "make_pyfiles.py"), out],
         check=True,
         capture_output=True,
     )
-    zip_path = os.path.join(REPO, "dist", "mopper_spark.zip")
+    return out
+
+
+@pytest.mark.skipif(
+    not os.path.exists(SPARK_SUBMIT), reason="spark-submit binary not available"
+)
+def test_spark_submit_pyfiles_job_and_resume(tmp_path, zip_path):
     cmd = [
         SPARK_SUBMIT,
         "--master",
@@ -74,18 +81,11 @@ def test_spark_submit_pyfiles_job_and_resume(tmp_path):
 @pytest.mark.skipif(
     not os.path.exists(SPARK_SUBMIT), reason="spark-submit binary not available"
 )
-def test_spark_submit_streaming_kg_job(tmp_path):
+def test_spark_submit_streaming_kg_job(tmp_path, zip_path):
     """jobs/kg_stream_job.py end-to-end in a separate JVM: the streaming
     incremental job's graph + dictionary must equal the batch pipeline's
     (order-insensitive convergence), and a resumed run with no new data
     must be a no-op."""
-    subprocess.run(
-        [sys.executable, os.path.join(REPO, "scripts", "make_pyfiles.py")],
-        check=True,
-        capture_output=True,
-    )
-    zip_path = os.path.join(REPO, "dist", "mopper_spark.zip")
-
     # slice the committed fixture into three landing files
     fixture = os.path.join(REPO, "fixtures", "transcripts_2000.parquet")
     prep = subprocess.run(
@@ -158,11 +158,10 @@ for i in range(3):
 @pytest.mark.skipif(
     not os.path.exists(SPARK_SUBMIT), reason="spark-submit binary not available"
 )
-def test_prep_job_resume_and_chained_invalidation(tmp_path):
+def test_prep_job_resume_and_chained_invalidation(tmp_path, zip_path):
     """jobs/prep_job.py: render→scrub→dedup→quality→pack→split as ONE
     resumable spark-submit job; fingerprints chain, so a --seq-len change
     re-runs exactly the packed+split suffix."""
-    zip_path = os.path.join(REPO, "dist", "mopper_spark.zip")
     base = [
         SPARK_SUBMIT,
         "--master",
