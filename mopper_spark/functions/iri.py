@@ -68,10 +68,8 @@ _RELREF_RE = re.compile(rf"{_REL_PART}{_TAIL}")
 INVALID_URI_CHAR_CLASS_JAVA = "[^A-Za-z0-9\\-._~:/?#\\[\\]@!$&'()*+,;=%]"
 
 #: Every character allowed in a URI (unreserved + reserved + '%').  The
-#: compiler's native fast path checks validity with
-#: ``length(translate(value, URI_ALLOWED_CHARS, '')) > 0`` — measured ~8×
-#: faster than ``when(value.rlike(...))``, which falls out of whole-stage
-#: codegen (scripts/profile_validity.py).
+#: compiler's native fast path looks only for the percent-encoder's raw
+#: survivors outside this set (``compiler._KEPT_NOT_URI_CLASS``).
 URI_ALLOWED_CHARS = (
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789"
     "-._~:/?#[]@!$&'()*+,;=%"

@@ -26,8 +26,9 @@ Only ``NQuads``/``NTriples`` formats are supported, like the reference
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import base64
+
+from pyspark.sql import DataFrame
 
 SUPPORTED_FORMATS = {"NQuads", "NTriples"}
 
@@ -66,20 +67,36 @@ def parse_statement_template(template: str) -> list[list[tuple[bool, str]]]:
     return lines
 
 
-def format_term(value: Column, kind: str) -> Column:
+def _sql_text(text: str) -> str:
+    """SQL for the constant ``text``, read the same way whatever
+    ``spark.sql.parser.escapedStringLiterals`` says: a quote or backslash
+    goes through base64, which holds neither (the optimizer folds the
+    decode back to a literal)."""
+    if "'" not in text and "\\" not in text:
+        return f"'{text}'"
+    b64 = base64.b64encode(text.encode("utf-8")).decode("ascii")
+    return f"cast(unbase64('{b64}') as string)"
+
+
+def _sql_concat(parts: list[str]) -> str:
+    return f"concat({', '.join(parts)})" if parts else "''"
+
+
+def format_term(value: str, kind: str) -> str:
+    """SQL formatting the SQL expression ``value`` as a term of ``kind``."""
     if kind == "iri":
-        return F.concat(F.lit("<"), value, F.lit(">"))
+        return _sql_concat(["'<'", value, "'>'"])
     if kind == "lit":
-        return F.concat(F.lit('"'), value, F.lit('"'))
+        return _sql_concat(["'\"'", value, "'\"'"])
     if kind.startswith("lit@"):
         # language-tagged literal: "v"@lang (kind carries the constant tag;
         # only produced under MopperOptions.literal_annotations)
-        return F.concat(F.lit('"'), value, F.lit('"@' + kind[4:]))
+        return _sql_concat(["'\"'", value, _sql_text('"@' + kind[4:])])
     if kind.startswith("lit^^"):
         # typed literal: "v"^^<dtype>
-        return F.concat(F.lit('"'), value, F.lit('"^^<' + kind[5:] + ">"))
+        return _sql_concat(["'\"'", value, _sql_text('"^^<' + kind[5:] + ">")])
     if kind == "blank":
-        return F.concat(F.lit("_:"), value)
+        return _sql_concat(["'_:'", value])
     # kind "str": emit the value (reference bug emits the text "str";
     # unreachable in its test plans — divergence documented above)
     return value
@@ -89,29 +106,32 @@ def compile_serializer(
     template: str,
     kinds: dict[str, str],
     data_format: str = "NQuads",
-) -> Column:
-    """Compile a statement template into an array<string> Column over a
+) -> str:
+    """Compile a statement template into the SQL of an array<string> over a
     DataFrame whose columns are the extend-variable names.
 
     Each array element is one serialized statement for the row; callers
-    explode it (statement fan-out — one row, k statements).
+    explode it (statement fan-out — one row, k statements).  SQL text, not
+    Columns: one expression parsed by the JVM instead of a py4j round trip
+    per ``concat``, ``lit`` and argument list.
     """
     if data_format not in SUPPORTED_FORMATS:
         raise NotImplementedError(
             f"Serializer: only NQuads/NTriples supported, got {data_format!r}"
         )
-    statement_cols: list[Column] = []
+    statements: list[str] = []
     for line_parts in parse_statement_template(template):
-        cols: list[Column] = []
+        parts: list[str] = []
         for is_var, text in line_parts:
             if is_var:
                 if text not in kinds:
                     raise KeyError(f"Serializer template variable {text!r} unbound")
-                cols.append(format_term(F.col(text), kinds[text]))
+                ident = "`" + text.replace("`", "``") + "`"
+                parts.append(format_term(ident, kinds[text]))
             else:
-                cols.append(F.lit(text))
-        statement_cols.append(F.concat(*cols) if cols else F.lit(""))
-    return F.array(*statement_cols)
+                parts.append(_sql_text(text))
+        statements.append(_sql_concat(parts))
+    return f"array({', '.join(statements)})"
 
 
 def serialize(
@@ -122,4 +142,4 @@ def serialize(
 ) -> DataFrame:
     """Apply statement templating: one output row per statement."""
     arr = compile_serializer(template, kinds, data_format)
-    return extended_df.select(F.explode(arr).alias("statement"))
+    return extended_df.selectExpr(f"explode({arr}) AS statement")

@@ -56,7 +56,7 @@ def test_engine_scan_is_column_pruned(spark):
 
 def test_extraction_fully_native(transcripts):
     """The extraction hot path compiles to zero Python stages: UriEncode is
-    a native hybrid (translate fast path + char-wise hex encode), so the
+    native (``url_encode`` plus literal replacements), so the
     whole plan is JVM-side and scales with cores instead of contending for
     the UDF worker pool (if a UDF ever reappears here, it must at least
     sit BELOW the explode — see git history for that weaker audit)."""
