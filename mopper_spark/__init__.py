@@ -8,7 +8,7 @@ Re-expresses the query/data-processing capabilities of the reference engine
                    expression language, ``src/operator/extension.rs:124-190``)
 - ``plan``       : AlgeMapLoom plan JSON → PlanGraph IR (``src/plan.rs``)
 - ``rewriter``   : plan rewrites (``src/plan_rewriter.rs``)
-- ``compiler``   : function trees → Spark Column expressions / pandas UDFs
+- ``compiler``   : function trees → Spark SQL expression text
 - ``serializer`` : N-Triples/N-Quads statement templating
                    (``src/operator/serializer.rs``)
 - ``engine``     : end-to-end plan execution (``src/lib.rs``)

@@ -19,6 +19,9 @@ over the same rows: each statement followed by ``\n``, UTF-8.  The driver
 reads what the executors wrote, so the session's master must be local
 (``get_spark`` always builds one); a session adopted from elsewhere with a
 cluster master is refused with ``NonLocalMasterError``.
+
+``main()`` adopts the caller's active session as it is, runtime settings
+included, and builds one with ``get_spark`` only when there is none.
 """
 
 from __future__ import annotations
@@ -102,6 +105,8 @@ def main(argv: list[str] | None = None) -> int:
     else:
         plan = text  # AlgeMapLoom plan JSON
 
+    from pyspark.sql import SparkSession
+
     from mopper_spark.engine import run_plan
     from mopper_spark.options import MopperOptions
     from mopper_spark.session import get_spark
@@ -112,7 +117,7 @@ def main(argv: list[str] | None = None) -> int:
         deduplicate=args.deduplicate,
         working_dir_hint=os.path.dirname(os.path.abspath(args.mapping_file)),
     )
-    spark = get_spark()
+    spark = SparkSession.getActiveSession() or get_spark()
     out_path = args.force_to_file
     written: set[str] = set()  # first write per path this run truncates —
     # appending to a file left by a PREVIOUS run would duplicate output

@@ -1,17 +1,22 @@
-"""Function-tree → Spark Column compiler (the ExtendOp workhorse).
+"""Function-tree → Spark SQL text compiler (the ExtendOp workhorse).
 
-Compiles each mapping function tree
-(``/root/reference/src/operator/extension.rs:124-190``) into a native Spark
-Column expression; the only Python a compiled plan can hold is a
-vectorized FnO implementation registered in ``MopperOptions.fno_registry``.
-Row-at-a-time Python (``BatchEvalPython``) never appears in the plan.
+Compiles each mapping function tree (the reference's
+``src/operator/extension.rs:124-190``) into native Spark SQL text, so an
+ExtendOp is one ``selectExpr``: one py4j call instead of one per Column
+function, literal and argument list.  Identifiers are backtick-quoted and
+constants go through ``serializer._sql_text``.  The only Python a compiled
+plan can hold is a vectorized FnO implementation registered in
+``MopperOptions.fno_registry``: Column in (``F.expr`` of each argument's
+SQL), Column out, bound as a hidden input column by a ``select`` before
+the node's ``selectExpr``.  Row-at-a-time Python (``BatchEvalPython``)
+never appears in the plan.
 
 Scale notes
 -----------
 - Everything here is embarrassingly parallel per partition: no shuffles.
 - The hot path for RML-style IRI templates (constant absolute skeleton +
   ``UriEncode``-wrapped slots) compiles to pure JVM ``concat`` + one
-  ``rlike`` validity check — whole-stage-codegen friendly, no Python at all.
+  ``RLIKE`` validity check — whole-stage-codegen friendly, no Python at all.
   The compile-time proof: percent-encoded slot values consist only of
   unreserved chars, ``%XX`` escapes, and the raw survivors
   ``" < > \\ ^ ` { | }``; given a structurally valid constant skeleton the
@@ -26,7 +31,7 @@ import re
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mopper_spark import rules
@@ -43,6 +48,7 @@ from mopper_spark.functions.templates import (
     parse_template,
     remove_join_alias_prefix,
 )
+from mopper_spark.serializer import _sql_concat, _sql_ident, _sql_text
 
 log = logging.getLogger(__name__)
 
@@ -51,7 +57,7 @@ _SCHEME_PREFIX_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
 
 @dataclass
 class CompiledTerm:
-    col: Column
+    sql: str
     kind: str  # "iri" | "lit" | "blank" | "str"
 
 
@@ -73,8 +79,9 @@ _KEPT_NOT_URI_CLASS = "[%s]" % re.escape(
 )
 
 
-def pct_encode_native(col: Column) -> Column:
-    """Percent-encode entirely JVM-side (pct-str URIReserved parity).
+def pct_encode_native(value: str) -> str:
+    """SQL percent-encoding the SQL expression ``value`` entirely JVM-side
+    (pct-str URIReserved parity).
 
     ``url_encode`` (UTF-8 bytes, uppercase hex) followed by the
     ``_URL_ENCODE_FIXES`` replacements, which map URLEncoder's character
@@ -87,29 +94,28 @@ def pct_encode_native(col: Column) -> Column:
     a copy of itself, so a plan that uses it twice (the IRI fast path's
     value and validity check) evaluates it once per row.
     """
-    encoded = F.url_encode(col)
+    encoded = f"url_encode({value})"
     for old, new in _URL_ENCODE_FIXES:
-        encoded = F.replace(encoded, F.lit(old), F.lit(new))
+        encoded = f"replace({encoded}, {_sql_text(old)}, {_sql_text(new)})"
     return encoded
 
 
-def iri_finalize_native(col: Column, base_iri: str | None) -> Column:
-    """The reference's Iri resolution (iri.rs:44-69) entirely JVM-side.
+def iri_finalize_native(value: str, base_iri: str | None) -> str:
+    """SQL of the reference's Iri resolution (iri.rs:44-69) over the SQL
+    expression ``value``, entirely JVM-side.
 
-    The RFC 3986 fullmatch regexes run via ``rlike`` — slower than the
-    translate trick of the skeleton fast path, but with no Arrow round
+    The RFC 3986 fullmatch regexes run via ``RLIKE`` — slower than the
+    one-class check of the skeleton fast path, but with no Arrow round
     trip and no Python worker contention; byte parity with
     ``iri_finalize`` is pinned by a hypothesis property test.
     """
-    v = F.coalesce(col, F.lit(""))
-    with_base = F.concat(F.lit(base_iri), v) if base_iri else v
+    v = f"coalesce({value}, '')"
+    with_base = _sql_concat([_sql_text(base_iri), v]) if base_iri else v
+    uri, relref = _sql_text(URI_FULLMATCH), _sql_text(RELREF_FULLMATCH)
     return (
-        F.when(v.rlike(URI_FULLMATCH), v)
-        .when(
-            with_base.rlike(URI_FULLMATCH) | with_base.rlike(RELREF_FULLMATCH),
-            with_base,
-        )
-        .otherwise(F.lit("INVALID"))
+        f"CASE WHEN {v} RLIKE {uri} THEN {v} "
+        f"WHEN {with_base} RLIKE {uri} OR {with_base} RLIKE {relref} "
+        f"THEN {with_base} ELSE 'INVALID' END"
     )
 
 
@@ -156,6 +162,7 @@ class FunctionCompiler:
         self.join_alias = join_alias
         self.fno_registry = fno_registry or {}
         self.literal_annotations = literal_annotations
+        self.bindings: list[tuple[str, Column]] = []
 
     @staticmethod
     def _const_value(fn: rules.Function | None) -> str | None:
@@ -170,31 +177,34 @@ class FunctionCompiler:
             f"({type(fn).__name__})"
         )
 
+    def select(self, df: DataFrame, terms: list[tuple[str, CompiledTerm]]) -> DataFrame:
+        """One column per ``(name, term)``: a ``select`` per FnO binding (a
+        nested FnO reads the one before it), then one ``selectExpr``."""
+        for hidden, col in self.bindings:
+            df = df.select("*", col.alias(hidden))
+        return df.selectExpr(
+            *(f"{t.sql} AS {_sql_ident(name)}" for name, t in terms)
+        )
+
     # -- helpers ---------------------------------------------------------
-    def _ref_col(self, name: str) -> Column:
+    def _ref_sql(self, name: str) -> str:
         stripped = remove_join_alias_prefix(name, self.join_alias)
         if stripped not in self.columns:
             # reference warns (csv_file.rs:84-87) rather than failing; we
             # bind a deterministic empty string instead of their index-0
             # misalignment.
             log.warning("Referenced column %r not in input; binding ''", stripped)
-            return F.lit("")
-        return F.coalesce(F.col(stripped).cast("string"), F.lit(""))
+            return "''"
+        return f"coalesce(cast({_sql_ident(stripped)} as string), '')"
 
     def compile(self, fn: rules.Function) -> CompiledTerm:
-        if isinstance(fn, rules.Reference):
-            return CompiledTerm(self._ref_col(fn.value), "str")
-        if isinstance(fn, rules.Constant):
-            return CompiledTerm(F.lit(fn.value), "str")
-        if isinstance(fn, rules.TemplateString):
-            return CompiledTerm(self._template_string_col(fn.template), "str")
-        if isinstance(fn, rules.TemplateFunctionValue):
-            return CompiledTerm(self._template_fv_col(fn), "str")
-        if isinstance(fn, rules.UriEncode):
-            inner = self.compile(fn.inner)
-            return CompiledTerm(pct_encode_native(inner.col), "str")
         if isinstance(fn, rules.Iri):
-            return self._compile_iri(fn)
+            # proven-safe skeleton fast path, else native RLIKE resolution
+            return CompiledTerm(
+                self._try_iri_fast(fn)
+                or iri_finalize_native(self.compile(fn.inner).sql, fn.base_iri),
+                "iri",
+            )
         if isinstance(fn, rules.Literal):
             # dtype/lang unapplied by DEFAULT — reference parity
             # (src/function/literal.rs:36-37 TODO).  With
@@ -209,89 +219,90 @@ class FunctionCompiler:
                     kind = f"lit@{lang}"
                 elif dtype:
                     kind = f"lit^^{dtype}"
-            return CompiledTerm(self.compile(fn.inner).col, kind)
+            return CompiledTerm(self.compile(fn.inner).sql, kind)
         if isinstance(fn, rules.BlankNode):
-            return CompiledTerm(self.compile(fn.inner).col, "blank")
+            return CompiledTerm(self.compile(fn.inner).sql, "blank")
+        return CompiledTerm(self._sql(fn), "str")
+
+    def _sql(self, fn: rules.Function) -> str:
+        """SQL of a string-valued node."""
+        if isinstance(fn, rules.Reference):
+            return self._ref_sql(fn.value)
+        if isinstance(fn, rules.Constant):
+            return _sql_text(fn.value)
+        if isinstance(fn, rules.TemplateString):
+            parts = parse_template(fn.template, self.join_alias)
+            return _sql_concat([
+                self._ref_sql(text) if is_var else _sql_text(text)
+                for is_var, text in parts
+            ])
+        if isinstance(fn, rules.TemplateFunctionValue):
+            return self._template_fv_sql(fn)
+        if isinstance(fn, rules.UriEncode):
+            return pct_encode_native(self.compile(fn.inner).sql)
         if isinstance(fn, rules.Concatenate):
-            cols = [self.compile(i).col for i in fn.inners]
+            args = [self.compile(i).sql for i in fn.inners]
             if fn.separator:
-                return CompiledTerm(F.concat_ws(fn.separator, *cols), "str")
-            return CompiledTerm(F.concat(*cols) if cols else F.lit(""), "str")
+                return f"concat_ws({', '.join([_sql_text(fn.separator), *args])})"
+            return _sql_concat(args)
         if isinstance(fn, rules.Lower):
-            return CompiledTerm(F.lower(self.compile(fn.inner).col), "str")
+            return f"lower({self.compile(fn.inner).sql})"
         if isinstance(fn, rules.Upper):
-            return CompiledTerm(F.upper(self.compile(fn.inner).col), "str")
+            return f"upper({self.compile(fn.inner).sql})"
         if isinstance(fn, rules.Replace):
-            return CompiledTerm(
-                F.replace(
-                    self.compile(fn.inner).col, F.lit(fn.old), F.lit(fn.new)
-                ),
-                "str",
-            )
+            inner = self.compile(fn.inner).sql
+            return f"replace({inner}, {_sql_text(fn.old)}, {_sql_text(fn.new)})"
         if isinstance(fn, rules.Match):
-            col = self.compile(fn.inner).col
-            # chained native when/isin — full-string equality, first rule
-            # wins, non-matching values pass through (codegen-friendly; a
-            # matcher is a handful of literals, never data-sized)
-            w = None
-            for canonical, variants in fn.rules:
-                cond = col.isin(list(variants))
-                w = F.when(cond, F.lit(canonical)) if w is None else w.when(
-                    cond, F.lit(canonical)
-                )
-            return CompiledTerm(w.otherwise(col) if w is not None else col, "str")
+            value = self.compile(fn.inner).sql
+            # full-string equality, first rule wins, non-matching values
+            # pass through (a matcher is a handful of literals, never
+            # data-sized); a rule with no variants never matches
+            whens = [
+                f"WHEN {value} IN ({', '.join(map(_sql_text, variants))}) "
+                f"THEN {_sql_text(canonical)}"
+                for canonical, variants in fn.rules
+                if variants
+            ]
+            return f"CASE {' '.join(whens)} ELSE {value} END" if whens else value
         if isinstance(fn, rules.FnO):
             impl = self.fno_registry.get(fn.function)
             if impl is None:
                 raise NotImplementedError(
                     f"FnO function {fn.function!r} not registered"
                 )
-            args = {name: self.compile(f).col for name, f in fn.parameters}
-            return CompiledTerm(impl(**args), "str")
+            args = {name: F.expr(self.compile(f).sql) for name, f in fn.parameters}
+            hidden = f"__fno{len(self.bindings)}"
+            while hidden in self.columns:
+                hidden = "_" + hidden
+            self.bindings.append((hidden, impl(**args)))
+            return _sql_ident(hidden)
         raise NotImplementedError(f"Unknown function node {type(fn).__name__}")
 
     # -- templates -------------------------------------------------------
-    def _template_string_col(self, template: str) -> Column:
-        parts = parse_template(template, self.join_alias)
-        cols = [
-            self._ref_col(text) if is_var else F.lit(text)
-            for is_var, text in parts
-        ]
-        return F.concat(*cols) if cols else F.lit("")
-
-    def _template_fv_col(self, fn: rules.TemplateFunctionValue) -> Column:
+    def _template_fv_sql(self, fn: rules.TemplateFunctionValue) -> str:
         parts = parse_template(fn.template, self.join_alias)
         # pair names get alias-stripped exactly like extension.rs:145-152
         pair_map = {
             remove_join_alias_prefix(name, self.join_alias): f
             for name, f in fn.variable_function_pairs
         }
-        cols: list[Column] = []
+        out: list[str] = []
         for is_var, text in parts:
             if is_var:
                 if text not in pair_map:
                     raise KeyError(
                         f"Template variable {text!r} has no function binding"
                     )
-                cols.append(self.compile(pair_map[text]).col)
+                out.append(self.compile(pair_map[text]).sql)
             else:
-                cols.append(F.lit(text))
-        return F.concat(*cols) if cols else F.lit("")
+                out.append(_sql_text(text))
+        return _sql_concat(out)
 
-    # -- Iri: proven-safe skeleton fast path, else native rlike resolution --
-    def _compile_iri(self, fn: rules.Iri) -> CompiledTerm:
-        fast = self._try_iri_fast(fn)
-        if fast is not None:
-            return CompiledTerm(fast, "iri")
-        inner = self.compile(fn.inner)
-        return CompiledTerm(iri_finalize_native(inner.col, fn.base_iri), "iri")
-
-    def _try_iri_fast(self, fn: rules.Iri) -> Column | None:
+    def _try_iri_fast(self, fn: rules.Iri) -> str | None:
         inner = fn.inner
         if isinstance(inner, rules.Constant):
             # fully constant: fold at compile time with exact semantics
-            result = iri_finalize(pd.Series([inner.value]), fn.base_iri)[0]
-            return F.lit(result)
+            return _sql_text(iri_finalize(pd.Series([inner.value]), fn.base_iri)[0])
         if not isinstance(inner, rules.TemplateFunctionValue):
             return None
         try:
@@ -315,7 +326,7 @@ class FunctionCompiler:
             and is_valid_uri(skeleton_x)
             and is_valid_uri(skeleton_e)
         ):
-            prefix_cols: list[Column] = []
+            prefix: list[str] = []
         elif (
             fn.base_iri
             and not _maybe_absolute(parts)
@@ -323,36 +334,40 @@ class FunctionCompiler:
             and is_valid_uri(fn.base_iri + skeleton_x)
             and is_valid_uri_reference(fn.base_iri + skeleton_e)
         ):
-            prefix_cols = [F.lit(fn.base_iri)]
+            prefix = [_sql_text(fn.base_iri)]
         else:
             return None
 
-        value = F.concat(*prefix_cols, self._template_fv_col(inner))
+        value = _sql_concat([*prefix, self._template_fv_sql(inner)])
         # the skeleton is a valid URI and every slot is pct-encoded, so a
         # row is invalid iff it holds a character pct-str keeps raw that no
         # URI may hold: one regex find, no per-character allocation
         # (``translate`` builds a String per character it looks up)
-        has_invalid = value.rlike(_KEPT_NOT_URI_CLASS)
-        return F.when(has_invalid, F.lit("INVALID")).otherwise(value)
+        return (
+            f"CASE WHEN {value} RLIKE {_sql_text(_KEPT_NOT_URI_CLASS)} "
+            f"THEN 'INVALID' ELSE {value} END"
+        )
 
 
 def compile_extend(
     extend_config: dict,
-    available_columns: list[str],
+    parent: DataFrame,
     join_alias: str | None = None,
     fno_registry: dict | None = None,
     literal_annotations: bool = False,
-) -> list[tuple[str, CompiledTerm]]:
-    """Compile an ExtendOp config ``{"?var": function-json-or-Function}``.
+) -> tuple[DataFrame, dict[str, str]]:
+    """Apply an ExtendOp config ``{"?var": function-json-or-Function}`` to
+    ``parent``: returns the extended DataFrame (one column per variable) and
+    each variable's term kind.
 
     Output variable names drop the leading ``?`` exactly like the reference
     header protocol (``extension.rs:73-80``).
     """
-    fc = FunctionCompiler(available_columns, join_alias, fno_registry, literal_annotations)
-    out: list[tuple[str, CompiledTerm]] = []
+    fc = FunctionCompiler(parent.columns, join_alias, fno_registry, literal_annotations)
+    terms: list[tuple[str, CompiledTerm]] = []
     for name, fn in extend_config.items():
         if isinstance(fn, dict):
             fn = rules.from_json(fn)
         var = name[1:] if name.startswith("?") else name
-        out.append((var, fc.compile(fn)))
-    return out
+        terms.append((var, fc.compile(fn)))
+    return fc.select(parent, terms), {var: t.kind for var, t in terms}

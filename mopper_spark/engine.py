@@ -12,8 +12,10 @@ Per-node mapping (SURVEY.md §2.1):
 - ProjectOp    → folded away by the rewriter (Catalyst column pruning)
 - FragmentOp   → folded away (DataFrame DAG reuse)
 - JoinOp       → ``left.join(right_prefixed, on=…, how='inner')``; right
-                 columns renamed ``{join_alias}_{c}`` (join.rs:133)
-- ExtendOp     → ``select`` of compiled Column expressions
+                 columns renamed ``{join_alias}_{c}`` (join.rs:133) by one
+                 ``selectExpr``
+- ExtendOp     → one ``selectExpr`` of the compiled SQL expressions (plus
+                 one ``select`` per registered FnO call binding its result)
 - SerializerOp → statement templating + ``explode`` fan-out
 - TargetOp     → ``unionByName`` of incoming statement streams
                  (+ optional ``dropDuplicates`` ↔ the -d flag)
@@ -25,13 +27,12 @@ import logging
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from mopper_spark.compiler import compile_extend
 from mopper_spark.options import MopperOptions
 from mopper_spark.plan import PlanGraph, parse_plan
 from mopper_spark.rewriter import rewrite
-from mopper_spark.serializer import serialize
+from mopper_spark.serializer import _sql_ident, serialize
 from mopper_spark.sources import SourceRegistry, resolve_source
 
 log = logging.getLogger(__name__)
@@ -92,15 +93,13 @@ class PlanExecutor:
             df = self._join(graph, node)
         elif op == "ExtendOp":
             parent = self._output(graph, node.from_[0])
-            compiled = compile_extend(
+            df, self._kinds[node_id] = compile_extend(
                 node.config,
-                parent.columns,
+                parent,
                 node.join_alias,
                 self.options.fno_registry,
                 self.options.literal_annotations,
             )
-            df = parent.select([t.col.alias(var) for var, t in compiled])
-            self._kinds[node_id] = {var: t.kind for var, t in compiled}
         elif op == "SerializerOp":
             parent_id = node.from_[0]
             parent = self._output(graph, parent_id)
@@ -132,8 +131,8 @@ class PlanExecutor:
         alias = cfg.get("join_alias", "join_0")
         pairs = [tuple(p) for p in cfg.get("left_right_attr_pairs", [])]
 
-        renamed = right.select(
-            [F.col(c).alias(f"{alias}_{c}") for c in right.columns]
+        renamed = right.selectExpr(
+            *(f"{_sql_ident(c)} AS {_sql_ident(f'{alias}_{c}')}" for c in right.columns)
         )
         if not pairs:
             # Reference quirk: a genuinely surviving join with no key pairs
@@ -147,7 +146,7 @@ class PlanExecutor:
 
         cond = None
         for l, r in pairs:
-            c = left[l] == renamed[f"{alias}_{r}"]
+            c = left[_sql_ident(l)] == renamed[_sql_ident(f"{alias}_{r}")]
             cond = c if cond is None else (cond & c)
         return left.join(renamed, cond, "inner")
 

@@ -38,11 +38,9 @@ def canonical_map(forms: DataFrame, edges: DataFrame) -> DataFrame:
         .select(F.col("norm_a").alias("u"), F.col("norm_b").alias("v"))
     )
     comp = connected_components(linked)
-    canon = F.coalesce("component", "norm")
-    return known.join(comp.withColumnRenamed("node", "norm"), "norm", "left").select(
+    canon = "coalesce(component, norm)"
+    return known.join(comp.withColumnRenamed("node", "norm"), "norm", "left").selectExpr(
         "norm",
-        canon.alias("canonical_norm"),
-        F.concat(F.lit(EX + "entity/"), pct_encode_native(canon)).alias(
-            "canonical_iri"
-        ),
+        f"{canon} AS canonical_norm",
+        f"concat('{EX}entity/', {pct_encode_native(canon)}) AS canonical_iri",
     )

@@ -49,12 +49,10 @@ def extract_triples(transcripts: DataFrame) -> DataFrame:
     """Transcripts → (subj, pred, obj, okind, graph) triples, one narrow pass.
 
     Plan-shape note (scripts/profile_extraction.py): every term expression —
-    especially the pandas-UDF percent-encode slots — is materialized in a
-    projection *below* the explode, so UDFs and IRI assembly run once per
-    INPUT row, not once per output triple (3-4× less work), and the shared
-    ``conv_id`` encoding is computed once.  Putting the term expressions
-    directly in the exploding select makes Spark place ArrowEvalPython
-    above the Generate and re-evaluate per exploded row.
+    the ``url_encode`` percent-encode slots and the IRI assembly — is
+    materialized in one ``selectExpr`` *below* the explode, so it runs once
+    per INPUT row, not once per output triple, and the shared ``conv_id``
+    encoding is computed once.
     """
     fc = FunctionCompiler(transcripts.columns)
 
@@ -65,14 +63,14 @@ def extract_triples(transcripts: DataFrame) -> DataFrame:
     def lit(colname: str):
         return fc.compile(R.Literal(R.Reference(colname)))
 
-    pre = transcripts.select(
-        subj.col.alias("subj"),
-        graph.col.alias("graph"),
-        conv_iri.col.alias("conv_iri"),
-        lit("role").col.alias("o_role"),
-        lit("text").col.alias("o_text"),
-        lit("tool").col.alias("o_tool"),
-        F.col("tool").isNotNull().alias("has_tool"),
+    pre = transcripts.selectExpr(
+        f"{subj.sql} AS subj",
+        f"{graph.sql} AS graph",
+        f"{conv_iri.sql} AS conv_iri",
+        f"{lit('role').sql} AS o_role",
+        f"{lit('text').sql} AS o_text",
+        f"{lit('tool').sql} AS o_tool",
+        "tool IS NOT NULL AS has_tool",
     )
 
     # (predicate, object, object-kind, emit-condition). RML semantics: a
@@ -140,17 +138,17 @@ def mention_triples(mentions: DataFrame, canonical: DataFrame | None = None) -> 
     obj = fc.compile(_uri_template(EX + "entity/{surface}", ["surface"]))
 
     df = mentions
-    obj_col = obj.col
+    obj_col = F.expr(obj.sql)
     if canonical is not None:
         from mopper_spark.pipeline.linking import normalize_surface
 
         df = mentions.withColumn("norm", normalize_surface(F.col("surface"))).join(
             F.broadcast(canonical), "norm", "left"
         )
-        obj_col = F.coalesce(F.col("canonical_iri"), obj.col)
+        obj_col = F.coalesce(F.col("canonical_iri"), obj_col)
 
     return df.select(
-        subj.col.alias("subj"),
+        F.expr(subj.sql).alias("subj"),
         F.lit(EX + "ontology/mentions").alias("pred"),
         obj_col.alias("obj"),
         F.lit("iri").alias("okind"),

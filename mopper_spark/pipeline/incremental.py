@@ -154,12 +154,10 @@ def with_canonical_iri(dictionary: DataFrame) -> DataFrame:
     from mopper_spark.compiler import pct_encode_native
     from mopper_spark.pipeline.canonicalize import EX
 
-    return dictionary.select(
+    return dictionary.selectExpr(
         "norm",
         "canonical_norm",
-        F.concat(
-            F.lit(EX + "entity/"), pct_encode_native(F.col("canonical_norm"))
-        ).alias("canonical_iri"),
+        f"concat('{EX}entity/', {pct_encode_native('canonical_norm')}) AS canonical_iri",
     )
 
 

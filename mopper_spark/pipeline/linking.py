@@ -98,8 +98,7 @@ def _hash_vecs():
     return _A_VEC, _B_VEC
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def minhash_band_keys(norms: pd.Series) -> pd.Series:
+def minhash_band_keys(norms: Column) -> Column:
     """Per form: LSH band keys 'mh{band}:{joined minhash values}'.
 
     One (num_hashes × |shingles|) numpy pass per form instead of a Python
@@ -114,7 +113,14 @@ def minhash_band_keys(norms: pd.Series) -> pd.Series:
     the committed fixture by
     tests/test_pipeline.py (blocking-recall test); whenever the fixture
     changes, that pin re-validates the fixture-dependent recall.
+
+    Built per call: a pandas UDF built at import keeps the accumulator of
+    its first SparkContext, whose updates fail after a restart.
     """
+    return F.pandas_udf(_minhash_band_keys, ArrayType(StringType()))(norms)
+
+
+def _minhash_band_keys(norms: pd.Series) -> pd.Series:
     import numpy as np
 
     a_vec, b_vec = _hash_vecs()
@@ -148,10 +154,13 @@ def blocking_keys(forms: DataFrame) -> DataFrame:
     return forms.select(F.col("norm"), F.explode(keys).alias("key"))
 
 
-@F.pandas_udf(BooleanType())
-def _score_pair(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Accept/reject a candidate pair of normalized forms."""
+def _score_pair(a: Column, b: Column) -> Column:
+    """Accept/reject a candidate pair of normalized forms (built per call,
+    like ``minhash_band_keys``)."""
+    return F.pandas_udf(_score_pairs, BooleanType())(a, b)
 
+
+def _score_pairs(a: pd.Series, b: pd.Series) -> pd.Series:
     def initials_match(ta: list[str], tb: list[str]) -> bool:
         # "v williams" vs "venus williams": same length, each token either
         # equal or one is the other's initial

@@ -252,17 +252,17 @@ def interval_quads(intervals: DataFrame) -> DataFrame:
                 F.lit(ONT + "ActivityInterval"),
                 "iri",
             ),
-            stmt(ONT + "entity", ent.col, "iri"),
+            stmt(ONT + "entity", F.expr(ent.sql), "iri"),
             # pct-encoded like every conv IRI the extraction layer emits —
             # a raw concat would produce an invalid IRI (and a join miss)
             # for conv ids containing reserved characters
-            stmt(ONT + "inConversation", conv.col, "iri"),
+            stmt(ONT + "inConversation", F.expr(conv.sql), "iri"),
             stmt(ONT + "validFrom", F.col("valid_from_us"), "lit"),
             stmt(ONT + "validTo", F.col("valid_to_us"), "lit"),
             stmt(ONT + "mentionCount", F.col("n_mentions"), "lit"),
         )
     ).alias("s")
-    return intervals.select(ival.col.alias("subj"), fan).select(
+    return intervals.select(F.expr(ival.sql).alias("subj"), fan).select(
         "subj",
         F.col("s.pred").alias("pred"),
         F.col("s.obj").alias("obj"),

@@ -71,11 +71,21 @@ def _sql_text(text: str) -> str:
     """SQL for the constant ``text``, read the same way whatever
     ``spark.sql.parser.escapedStringLiterals`` says: a quote or backslash
     goes through base64, which holds neither (the optimizer folds the
-    decode back to a literal)."""
-    if "'" not in text and "\\" not in text:
+    decode back to a literal).  So does ``${``, which Spark's variable
+    substitution would replace before parsing."""
+    if "'" not in text and "\\" not in text and "${" not in text:
         return f"'{text}'"
     b64 = base64.b64encode(text.encode("utf-8")).decode("ascii")
     return f"cast(unbase64('{b64}') as string)"
+
+
+def _sql_ident(name: str) -> str:
+    """A backtick-quoted identifier: a ``.``, space or backtick in ``name``
+    stays part of the name.  Refuses ``${``, which variable substitution
+    would replace and an identifier has no escape for."""
+    if "${" in name:
+        raise ValueError(f"column name {name!r} holds '${{', which Spark SQL substitutes")
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _sql_concat(parts: list[str]) -> str:
@@ -126,8 +136,7 @@ def compile_serializer(
             if is_var:
                 if text not in kinds:
                     raise KeyError(f"Serializer template variable {text!r} unbound")
-                ident = "`" + text.replace("`", "``") + "`"
-                parts.append(format_term(ident, kinds[text]))
+                parts.append(format_term(_sql_ident(text), kinds[text]))
             else:
                 parts.append(_sql_text(text))
         statements.append(_sql_concat(parts))

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from mopper_spark.options import MopperOptions
+from mopper_spark.serializer import _sql_ident
 
 log = logging.getLogger(__name__)
 
@@ -657,8 +658,8 @@ def resolve_source(
         for m in missing:
             # reference warns and continues (csv_file.rs:84-87)
             log.warning("Source %s: requested column %r missing; binding ''", path, m)
-        cols = [F.col(a) for a in sorted(present)] + [
-            F.lit("").alias(m) for m in missing
-        ]
-        df = df.select(cols)
+        df = df.selectExpr(
+            *map(_sql_ident, sorted(present)),
+            *(f"'' AS {_sql_ident(m)}" for m in missing),
+        )
     return df

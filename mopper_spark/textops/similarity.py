@@ -38,10 +38,13 @@ def cosine_native(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
-@F.pandas_udf(DoubleType())
-def cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched cosine (numpy) — for UDF-stage composition."""
+def cosine_udf(a: Column, b: Column) -> Column:
+    """Arrow-batched cosine (numpy) — for UDF-stage composition.  Built per
+    call, like ``linking.minhash_band_keys``."""
+    return F.pandas_udf(_cosines, DoubleType())(a, b)
 
+
+def _cosines(a: pd.Series, b: pd.Series) -> pd.Series:
     def c(x, y) -> float:
         x = np.asarray(x, dtype=np.float64)
         y = np.asarray(y, dtype=np.float64)

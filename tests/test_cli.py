@@ -17,6 +17,7 @@ from mopper_spark import session
 from mopper_spark.engine import run_plan, run_plan_to_lines
 from mopper_spark.options import MopperOptions
 from mopper_spark.rml import mapping_to_plan
+from mopper_spark.session import get_spark
 from mopper_spark.sources import resolve_source
 
 # -- CSV header schema ------------------------------------------------------
@@ -129,6 +130,70 @@ def test_run_plan_over_csv_starts_no_job(spark, tmp_path):
     assert [t.config["target_type"] for t in targets] == ["StdOut"]
 
 
+# three triples maps shaped like the benchmark's command-line mapping: a
+# graph map, classes, references, a template object and a join
+BUDGET_MAPPING = """\
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+@prefix rml: <http://semweb.mmlab.be/ns/rml#> .
+@prefix ql: <http://semweb.mmlab.be/ns/ql#> .
+@prefix ex: <http://example.com/ontology/> .
+
+<#Turns> a rr:TriplesMap ;
+  rml:logicalSource [ rml:source "turns.csv" ; rml:referenceFormulation ql:CSV ] ;
+  rr:subjectMap [ rr:template "http://example.com/turn/{turn_id}" ;
+                  rr:class ex:Turn ;
+                  rr:graphMap [ rr:template "http://example.com/graph/{role}" ] ] ;
+  rr:predicateObjectMap [ rr:predicate ex:role ; rr:objectMap [ rml:reference "role" ] ] ;
+  rr:predicateObjectMap [ rr:predicate ex:turnIdx ; rr:objectMap [ rml:reference "turn_idx" ] ] ;
+  rr:predicateObjectMap [ rr:predicate ex:tool ; rr:objectMap [ rml:reference "tool" ] ] ;
+  rr:predicateObjectMap [ rr:predicate ex:surface ; rr:objectMap [ rml:reference "mention" ] ] ;
+  rr:predicateObjectMap [
+    rr:predicate ex:mentions ;
+    rr:objectMap [ rr:template "http://example.com/entity/{mention}" ]
+  ] ;
+  rr:predicateObjectMap [
+    rr:predicate ex:inConversation ;
+    rr:objectMap [ rr:parentTriplesMap <#Convs> ;
+                   rr:joinCondition [ rr:child "conv_id" ; rr:parent "conv_id" ] ]
+  ] .
+
+<#Convs> a rr:TriplesMap ;
+  rml:logicalSource [ rml:source "convs.csv" ; rml:referenceFormulation ql:CSV ] ;
+  rr:subjectMap [ rr:template "http://example.com/conv/{conv_id}" ;
+                  rr:class ex:Conversation ] ;
+  rr:predicateObjectMap [ rr:predicate ex:title ; rr:objectMap [ rml:reference "title" ] ] .
+
+<#Entities> a rr:TriplesMap ;
+  rml:logicalSource [ rml:source "turns.csv" ; rml:referenceFormulation ql:CSV ] ;
+  rr:subjectMap [ rr:template "http://example.com/entity/{mention}" ;
+                  rr:class ex:Entity ] ;
+  rr:predicateObjectMap [ rr:predicate ex:label ; rr:objectMap [ rml:reference "mention" ] ] .
+"""
+
+
+def test_run_plan_py4j_budget(spark, tmp_path, monkeypatch):
+    """Building the plan's DataFrames stays within a py4j call budget: each
+    ExtendOp is one ``selectExpr``, not a round trip per Column call."""
+    from py4j.java_gateway import GatewayClient
+
+    (tmp_path / "turns.csv").write_text(
+        "turn_id,conv_id,turn_idx,role,tool,mention\n"
+        "c0-0,c0,0,user,,Ada Lovelace\nc0-1,c0,1,assistant,search,A. Lovelace\n")
+    (tmp_path / "convs.csv").write_text("conv_id,title\nc0,Conversation 0\n")
+    plan = mapping_to_plan(BUDGET_MAPPING, "rml")
+    calls = []
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    run_plan(plan, spark, MopperOptions(working_dir_hint=str(tmp_path)))
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 400
+
+
 # -- main() -----------------------------------------------------------------
 
 
@@ -237,7 +302,7 @@ def test_non_local_master_is_refused(tmp_path, monkeypatch):
         sparkContext=types.SimpleNamespace(master="spark://head:7077"),
         stop=lambda: stopped.append(True),
     )
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: cluster)
+    monkeypatch.setattr(SparkSession, "getActiveSession", lambda: cluster)
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     plan = tmp_path / "plan.json"
     plan.write_text(json.dumps({"nodes": []}))
@@ -245,3 +310,71 @@ def test_non_local_master_is_refused(tmp_path, monkeypatch):
         cli.main(["-m", str(plan), "-q"])
     assert stopped == [True]
     assert [p.name for p in tmp_path.iterdir()] == ["plan.json"]
+
+
+def test_callers_session_settings_survive(spark, tmp_path, staging_root, monkeypatch):
+    """``main()`` adopts the active session without re-applying
+    ``get_spark``'s settings over the caller's."""
+    monkeypatch.setattr(session, "get_spark", get_spark)
+    mapping = _write_inputs(tmp_path)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        out = tmp_path / "out.nq"
+        assert cli.main(["-m", mapping, "-l", "rml", "-q", "--force-to-file", str(out)]) == 0
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert out.read_bytes() == _expected(
+        spark, mapping_to_plan(MAPPING, "rml"), tmp_path, force_to_file=str(out))
+
+
+# -- column names that are not plain identifiers ---------------------------
+
+ODD_NAMES_MAPPING = """\
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+@prefix rml: <http://semweb.mmlab.be/ns/rml#> .
+@prefix ql: <http://semweb.mmlab.be/ns/ql#> .
+@prefix ex: <http://example.com/> .
+
+<#People> a rr:TriplesMap ;
+  rml:logicalSource [ rml:source "people.csv" ; rml:referenceFormulation ql:CSV ] ;
+  rr:subjectMap [ rr:template "http://example.com/person/{first.name}" ] ;
+  rr:predicateObjectMap [ rr:predicate ex:last ; rr:objectMap [ rml:reference "last name" ] ] ;
+  rr:predicateObjectMap [ rr:predicate ex:nick ; rr:objectMap [ rml:reference "nick`name" ] ] .
+
+<#Pets> a rr:TriplesMap ;
+  rml:logicalSource [ rml:source "pets.csv" ; rml:referenceFormulation ql:CSV ] ;
+  rr:subjectMap [ rr:template "http://example.com/pet/{pet.id}" ] ;
+  rr:predicateObjectMap [
+    rr:predicate ex:owner ;
+    rr:objectMap [ rr:parentTriplesMap <#People> ;
+                   rr:joinCondition [ rr:child "owner.name" ; rr:parent "first.name" ] ]
+  ] .
+"""
+
+
+def test_header_names_with_dot_space_and_backtick(tmp_path, staging_root):
+    """A ``.`` in a header is part of the name, not a struct path; the
+    names are quoted in the source pruning, the join and the terms."""
+    (tmp_path / "people.csv").write_text(
+        "first.name,last name,nick`name\nAda,Love lace,ad`a\nAlan,Turing,al\n")
+    (tmp_path / "pets.csv").write_text(
+        "pet.id,owner.name\np1,Ada\np2,Alan\np3,Nobody\n")
+    mapping = tmp_path / "mapping.ttl"
+    mapping.write_text(ODD_NAMES_MAPPING)
+    out = tmp_path / "out.nq"
+    assert cli.main(
+        ["-m", str(mapping), "-l", "rml", "-q", "--force-to-file", str(out)]) == 0
+    got = out.read_text()
+    assert got.endswith("\n")
+    assert sorted(got.splitlines()) == [
+        '<http://example.com/person/Ada> <http://example.com/last> "Love lace" .',
+        '<http://example.com/person/Ada> <http://example.com/nick> "ad`a" .',
+        '<http://example.com/person/Alan> <http://example.com/last> "Turing" .',
+        '<http://example.com/person/Alan> <http://example.com/nick> "al" .',
+        "<http://example.com/pet/p1> <http://example.com/owner> "
+        "<http://example.com/person/Ada> .",
+        "<http://example.com/pet/p2> <http://example.com/owner> "
+        "<http://example.com/person/Alan> .",
+    ]

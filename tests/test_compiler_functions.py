@@ -24,27 +24,27 @@ def df(spark):
     )
 
 
-def _vals(df, term):
-    return [r[0] for r in df.select(term.col.alias("v")).collect()]
+def _vals(fc, df, term):
+    return [r[0] for r in fc.select(df, [("v", term)]).collect()]
 
 
 class TestExtensionFunctions:
     def test_lower_upper(self, df):
         fc = FunctionCompiler(df.columns)
-        assert _vals(df, fc.compile(R.Lower(R.Reference("name")))) == ["alice", "bob"]
-        assert _vals(df, fc.compile(R.Upper(R.Reference("name")))) == ["ALICE", "BOB"]
+        assert _vals(fc, df, fc.compile(R.Lower(R.Reference("name")))) == ["alice", "bob"]
+        assert _vals(fc, df, fc.compile(R.Upper(R.Reference("name")))) == ["ALICE", "BOB"]
 
     def test_replace(self, df):
         fc = FunctionCompiler(df.columns)
-        out = _vals(df, fc.compile(R.Replace(R.Reference("words"), " ", "_")))
+        out = _vals(fc, df, fc.compile(R.Replace(R.Reference("words"), " ", "_")))
         assert out == ["x_y", "z"]
 
     def test_concatenate(self, df):
         fc = FunctionCompiler(df.columns)
         fn = R.Concatenate((R.Reference("name"), R.Constant("-"), R.Reference("num")))
-        assert _vals(df, fc.compile(fn)) == ["Alice-10", "Bob-20"]
+        assert _vals(fc, df, fc.compile(fn)) == ["Alice-10", "Bob-20"]
         sep = R.Concatenate((R.Reference("name"), R.Reference("num")), separator="/")
-        assert _vals(df, fc.compile(sep)) == ["Alice/10", "Bob/20"]
+        assert _vals(fc, df, fc.compile(sep)) == ["Alice/10", "Bob/20"]
 
     def test_fno_registry(self, df):
         fc = FunctionCompiler(
@@ -52,7 +52,43 @@ class TestExtensionFunctions:
             fno_registry={"ex:reverse": lambda value: F.reverse(value)},
         )
         fn = R.FnO("ex:reverse", (("value", R.Reference("name")),))
-        assert _vals(df, fc.compile(fn)) == ["ecilA", "boB"]
+        assert _vals(fc, df, fc.compile(fn)) == ["ecilA", "boB"]
+
+    def test_fno_nested_and_beside_sql(self, df):
+        fc = FunctionCompiler(
+            df.columns,
+            fno_registry={"ex:reverse": lambda value: F.reverse(value)},
+        )
+        inner = R.FnO("ex:reverse", (("value", R.Lower(R.Reference("name"))),))
+        fn = R.Concatenate(
+            (R.FnO("ex:reverse", (("value", inner),)), R.Constant("/"), inner)
+        )
+        assert _vals(fc, df, fc.compile(fn)) == ["alice/ecila", "bob/bob"]
+
+    def test_match(self, df):
+        fc = FunctionCompiler(df.columns)
+        fn = R.Match(
+            R.Reference("name"),
+            (("none", ()), ("A", ("Alice", "Al")), ("B", ("Alice", "Bob"))),
+        )
+        assert _vals(fc, df, fc.compile(fn)) == ["A", "B"]
+        unmatched = R.Match(R.Reference("num"), (("x", ("1",)),))
+        assert _vals(fc, df, fc.compile(unmatched)) == ["10", "20"]
+
+    def test_constants_reach_spark_verbatim(self, df):
+        # quotes, backslashes and ${...} (Spark SQL variable substitution)
+        fc = FunctionCompiler(df.columns)
+        text = "${spark.app.name} ${env:HOME} ${x} $5 'q' \\b \\u0041 \n"
+        assert _vals(fc, df, fc.compile(R.Constant(text))) == [text, text]
+
+    def test_odd_column_names(self, spark):
+        names = ["a.b", "c d", "e`f", "g'h"]
+        odd = spark.createDataFrame([("1", "2", "3", "4")], names)
+        fc = FunctionCompiler(odd.columns)
+        fn = R.Concatenate(tuple(R.Reference(n) for n in names), separator="|")
+        assert _vals(fc, odd, fc.compile(fn)) == ["1|2|3|4"]
+        with pytest.raises(ValueError, match="substitutes"):
+            FunctionCompiler(["${x}"]).compile(R.Reference("${x}"))
 
     def test_fno_unregistered_raises(self, df):
         fc = FunctionCompiler(df.columns)
@@ -62,7 +98,7 @@ class TestExtensionFunctions:
     def test_template_string_standalone(self, df):
         fc = FunctionCompiler(df.columns)
         fn = R.TemplateString("hello {name}!")
-        assert _vals(df, fc.compile(fn)) == ["hello Alice!", "hello Bob!"]
+        assert _vals(fc, df, fc.compile(fn)) == ["hello Alice!", "hello Bob!"]
 
     def test_nested_composition(self, df):
         # Iri(TemplateFunctionValue(UriEncode(Lower(Reference))))
@@ -76,15 +112,15 @@ class TestExtensionFunctions:
         )
         term = fc.compile(fn)
         assert term.kind == "iri"
-        assert _vals(df, term) == ["http://e.com/x%20y", "http://e.com/z"]
+        assert _vals(fc, df, term) == ["http://e.com/x%20y", "http://e.com/z"]
 
     def test_compile_extend_json_roundtrip(self, df):
-        compiled = compile_extend(
+        out, kinds = compile_extend(
             {"?v": {"type": "Upper", "inner_function": {"type": "Reference", "value": "name"}}},
-            df.columns,
+            df,
         )
-        assert compiled[0][0] == "v"
-        assert _vals(df, compiled[0][1]) == ["ALICE", "BOB"]
+        assert kinds == {"v": "str"}
+        assert [r.v for r in out.collect()] == ["ALICE", "BOB"]
 
 
 class TestProperties:
@@ -160,7 +196,7 @@ class TestPctEncodeNativeParity:
 
         collect()
         df = spark.createDataFrame([(s,) for s in corpus], "v string")
-        rows = df.select("v", pct_encode_native(F.col("v")).alias("e")).collect()
+        rows = df.select("v", F.expr(pct_encode_native("v")).alias("e")).collect()
         for r in rows:
             assert r.e == pct_encode(r.v), repr(r.v)
 
@@ -203,7 +239,7 @@ class TestIriNativeParity:
             expected = list(iri_finalize(pd.Series(corpus), base))
             df = spark.createDataFrame([(s,) for s in corpus], "v string")
             got = [r.e for r in df.select(
-                iri_finalize_native(F.col("v"), base).alias("e")).collect()]
+                F.expr(iri_finalize_native("v", base)).alias("e")).collect()]
             assert got == expected, [
                 (v, g, x) for v, g, x in zip(corpus, got, expected) if g != x
             ][:5]
