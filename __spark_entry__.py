@@ -10816,8 +10816,9 @@ def _q_docs_shuffle_order(spark: SparkSession, sf: str) -> DataFrame:
     every document's 0-based position in the md5-keyed corpus
     permutation — reproducible across runs, partitionings, and engines
     (the oracle is one ROW_NUMBER over the same hash).  Computed with
-    the bucketed-prefix idiom on the top 16 hash bits, so no global
-    sort; md5 uniformity makes the buckets balanced by construction."""
+    ``scan.exclusive_scan`` bucketed on the top 16 hash bits, so no
+    global sort; md5 uniformity makes the buckets balanced by
+    construction."""
     from mopper_spark.textops.sampling import shuffle_rank
 
     docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id")

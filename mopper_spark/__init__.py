@@ -21,6 +21,8 @@ Re-expresses the query/data-processing capabilities of the reference engine
                    materialize, checkpoint/resume)
 - ``textops``    : large-scale corpus operations (dedup, similarity search,
                    text analysis, multimodal plumbing)
+- ``scan``       : the bucketed exclusive running sum / max that ranks and
+                   offsets use instead of a single-partition window
 """
 
 __version__ = "0.1.0"

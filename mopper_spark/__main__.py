@@ -21,7 +21,10 @@ reads what the executors wrote, so the session's master must be local
 cluster master is refused with ``NonLocalMasterError``.
 
 ``main()`` adopts the caller's active session as it is, runtime settings
-included, and builds one with ``get_spark`` only when there is none.
+included, and builds one with ``get_spark`` only when there is none.  It
+stops the session it ran on when it returns, an adopted one included: a
+library caller that wants to keep its session must not call ``main()``
+with it active (the tests patch ``SparkSession.stop``).
 """
 
 from __future__ import annotations

@@ -64,9 +64,6 @@ _TAIL = rf"(?:\?{_QUERY})?(?:\#{_FRAGMENT})?"
 _URI_RE = re.compile(rf"{_SCHEME}:{_HIER_PART}{_TAIL}")
 _RELREF_RE = re.compile(rf"{_REL_PART}{_TAIL}")
 
-#: Java-regex character class matching any char *forbidden* in a URI.
-INVALID_URI_CHAR_CLASS_JAVA = "[^A-Za-z0-9\\-._~:/?#\\[\\]@!$&'()*+,;=%]"
-
 #: Every character allowed in a URI (unreserved + reserved + '%').  The
 #: compiler's native fast path looks only for the percent-encoder's raw
 #: survivors outside this set (``compiler._KEPT_NOT_URI_CLASS``).

@@ -34,17 +34,18 @@ deterministic under any partitioning, all strictly SQL-oracle-able:
 
     The vocabulary must be uniformly indexable (draw = index in
     [0, n_objects)); a global ``row_number`` would be a single-partition
-    sort, so the index is assigned with the same two-phase bucketed prefix
-    sum as ``textops/packing.py``: objects land in md5 buckets, ranks are
-    windowed WITHIN buckets (bounded partitions), bucket offsets are a
-    tiny cumsum broadcast back.  Reproducing that layout in the oracle is
-    one ``ROW_NUMBER() OVER (ORDER BY bucket, obj)``.
+    sort, so the index is an exclusive count by ``scan.exclusive_scan``:
+    objects land in md5 buckets (at most 65536), ranks are windowed
+    WITHIN buckets.  Reproducing that layout in the oracle is one
+    ``ROW_NUMBER() OVER (ORDER BY bucket, obj)``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from mopper_spark.scan import exclusive_scan
 
 # 16-bit md5 bucket space, matching textops/sampling.py::hash_bucket
 _IDX_BUCKETS = 65536
@@ -121,32 +122,14 @@ def _hash48(*cols) -> F.Column:
 def indexed_objects(triples: DataFrame) -> DataFrame:
     """Distinct objects with a dense deterministic index in
     [0, n_objects): position in (md5-bucket, obj) lexicographic order,
-    assigned by the two-phase bucketed prefix sum (no global sort).
+    assigned by ``scan.exclusive_scan`` as an exclusive count over the
+    65536 md5 buckets (no global sort).
     Returns ``(obj, idx)``."""
     objs = triples.select("obj").distinct()
-    bucketed = objs.withColumn(
-        "bucket",
-        F.conv(F.substring(F.md5(F.concat(F.lit("idx"), F.col("obj"))), 1, 4), 16, 10)
-        .cast("long"),
-    )
-    # within-bucket rank: bounded partitions (|objs| / 65536 expected rows)
-    in_bucket = Window.partitionBy("bucket").orderBy("obj")
-    ranked = bucketed.withColumn(
-        "rn", (F.row_number().over(in_bucket) - 1).cast("long")
-    )
-    # bucket offsets: tiny (≤ 65536-row) cumsum, broadcast back
-    bucket_w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        bucketed.groupBy("bucket")
-        .agg(F.count("*").alias("n"))
-        .withColumn(
-            "off", F.coalesce(F.sum("n").over(bucket_w), F.lit(0)).cast("long")
-        )
-        .select("bucket", "off")
-    )
-    return ranked.join(F.broadcast(offsets), "bucket").select(
-        "obj", (F.col("off") + F.col("rn")).alias("idx")
-    )
+    bucket = F.conv(
+        F.substring(F.md5(F.concat(F.lit("idx"), F.col("obj"))), 1, 4), 16, 10
+    ).cast("long")
+    return exclusive_scan(objs, bucket, ["obj"], sums={"idx": F.lit(1)})
 
 
 def negative_samples(

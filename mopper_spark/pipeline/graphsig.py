@@ -47,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mopper_spark.scan import exclusive_scan
+
 WL_SEED = "wl0"
 
 
@@ -164,10 +166,9 @@ def canonical_blank_labels(
 
     Scale shape: the rank is a global total order, but it is computed
     WITHOUT a single-partition sort — signatures are md5-uniform, so
-    bucketing on the first byte (256 buckets) + a 256-row prefix-sum of
-    bucket counts + per-bucket row_number reproduces the global
-    ``ORDER BY sig`` rank with only bucket-local sorts (the
-    ``packing.py`` offset idiom).  Everything else is two equi-joins.
+    ``scan.exclusive_scan`` bucketed on the first byte (256 buckets)
+    reproduces the global ``ORDER BY sig`` rank with only bucket-local
+    sorts.  Everything else is two equi-joins.
     """
     from pyspark.sql import Window
 
@@ -220,34 +221,14 @@ def canonical_blank_labels(
             .alias("lab"),
         )
         return _relabel(triples, labels)
-    bucketed = sigs.withColumn(
-        "bucket", F.conv(F.substring("sig", 1, 2), 16, 10).cast("int")
+    ranked = exclusive_scan(
+        sigs,
+        F.conv(F.substring("sig", 1, 2), 16, 10).cast("int"),
+        ["sig", "b"],
+        sums={"below": F.lit(1)},
     )
-    offsets = (
-        bucketed.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn(
-            "offset",
-            F.coalesce(
-                F.sum("cnt").over(
-                    Window.orderBy("bucket").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .drop("cnt")
-    )
-    labels = (
-        bucketed.join(offsets, "bucket")
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("bucket").orderBy("sig", "b")),
-        )
-        .select(
-            "b", F.concat(F.lit(prefix), F.col("offset") + F.col("rn")).alias("lab")
-        )
+    labels = ranked.select(
+        "b", F.concat(F.lit(prefix), F.col("below") + 1).alias("lab")
     )
     return _relabel(triples, labels)
 

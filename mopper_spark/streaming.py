@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from mopper_spark.scan import exclusive_scan
+
 TRANSCRIPT_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),
@@ -627,17 +629,14 @@ def lateness_audit(
     "how much data does a 1 h watermark cost us?" design question is
     answered from history before committing a streaming job to it.
 
-    The running max over arrival order is the bucketed-prefix-MAX idiom
-    (``pareto_front_2d``): per-arrival-bucket maxima, one running max
-    over the tiny bucket list, an in-bucket exclusive window — no global
-    sort of the event log.
+    The running max over arrival order is ``scan.exclusive_scan``
+    bucketed by arrival range (``bucket_width`` ordinals per bucket) —
+    no global sort of the event log.
 
     Output: input columns plus ``wm_us`` (the watermark each row faced;
     −1 for the first arrival — no earlier rows, never late, the
     fetch-safe sentinel) and ``late`` (0/1).
     """
-    from pyspark.sql import Window
-
     if delay_seconds < 0:
         raise ValueError("lateness_audit: delay_seconds must be >= 0")
     if bucket_width < 1:
@@ -646,24 +645,16 @@ def lateness_audit(
         f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00',"
         f" {ts_col})"
     )
-    t = df.withColumn("_ts_us", F.expr(ep).cast("long")).withColumn(
-        "_arr", F.col(arrival_col).cast("long")
-    ).withColumn("_bkt", F.floor(F.col("_arr") / F.lit(int(bucket_width))).cast("long"))
-    bmax = t.groupBy("_bkt").agg(F.max("_ts_us").alias("_bm"))
-    w_b = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    bpre = bmax.select(
-        "_bkt", F.max("_bm").over(w_b).alias("_bpre")
-    )
-    w_in = (
-        Window.partitionBy("_bkt")
-        .orderBy("_arr")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    arr = F.col(arrival_col).cast("long")
+    t = exclusive_scan(
+        df.withColumn("_ts_us", F.expr(ep).cast("long")).withColumn("_arr", arr),
+        F.floor(F.col("_arr") / F.lit(int(bucket_width))).cast("long"),
+        ["_arr"],
+        maxes={"_run": "_ts_us"},
     )
     delay_us = int(delay_seconds) * 1_000_000
     out = (
-        t.join(F.broadcast(bpre), "_bkt")
-        .withColumn("_run", F.greatest(F.col("_bpre"), F.max("_ts_us").over(w_in)))
-        .withColumn(
+        t.withColumn(
             "wm_us",
             F.coalesce(F.col("_run") - F.lit(delay_us), F.lit(-1)).cast("long"),
         )
@@ -676,7 +667,7 @@ def lateness_audit(
             ).otherwise(0).cast("long"),
         )
     )
-    return out.drop("_ts_us", "_arr", "_bkt", "_bpre", "_run")
+    return out.drop("_ts_us", "_arr", "_run")
 
 
 def process_band_count_batch(

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from mopper_spark.scan import exclusive_scan
+
 
 def zorder_key(cols: list[str], bits: int = 16) -> Column:
     """Morton key of d integer columns: bit i of column j lands at
@@ -97,15 +99,13 @@ def compaction_plan(
     at most one file (the standard bin-by-running-total compaction,
     e.g. Iceberg's binpack strategy).
 
-    The prefix sum is the two-phase bucketed idiom over the integer
-    ordinal — per-(partition, bucket) subtotals, a per-partition running
-    sum over the tiny bucket list, an in-bucket window — so planning a
-    billion-file manifest never global-sorts it.
+    The prefix sum is ``scan.exclusive_scan`` partitioned by
+    ``part_col`` and bucketed by ordinal range (``bucket_width``
+    ordinals per bucket), so planning a billion-file manifest never
+    global-sorts it.
 
     Output: ``(part_col, seq_col, size_col, start_bytes, grp)``.
     """
-    from pyspark.sql import Window
-
     if target_bytes < 1:
         raise ValueError("compaction_plan: target_bytes must be >= 1")
     if bucket_width < 1:
@@ -114,37 +114,20 @@ def compaction_plan(
         F.col(part_col).alias("_p"),
         F.col(seq_col).cast("long").alias("_s"),
         F.col(size_col).cast("long").alias("_b"),
-    ).withColumn("_bkt", F.floor(F.col("_s") / F.lit(int(bucket_width))).cast("long"))
-    bsub = t.groupBy("_p", "_bkt").agg(F.sum("_b").alias("_bb"))
-    w_b = (
-        Window.partitionBy("_p")
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
     )
-    bpre = bsub.select(
-        "_p",
-        "_bkt",
-        F.coalesce(F.sum("_bb").over(w_b), F.lit(0)).cast("long").alias("_bpre"),
+    placed = exclusive_scan(
+        t,
+        F.floor(F.col("_s") / F.lit(int(bucket_width))).cast("long"),
+        ["_s"],
+        sums={"start_bytes": "_b"},
+        partition_by=["_p"],
     )
-    w_in = (
-        Window.partitionBy("_p", "_bkt")
-        .orderBy("_s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        t.join(bpre, ["_p", "_bkt"])
-        .withColumn(
-            "start_bytes",
-            (F.col("_bpre") + F.coalesce(F.sum("_b").over(w_in), F.lit(0)))
-            .cast("long"),
-        )
-        .select(
-            F.col("_p").alias(part_col),
-            F.col("_s").alias(seq_col),
-            F.col("_b").alias(size_col),
-            "start_bytes",
-            F.expr(f"start_bytes div {int(target_bytes)}").alias("grp"),
-        )
+    return placed.select(
+        F.col("_p").alias(part_col),
+        F.col("_s").alias(seq_col),
+        F.col("_b").alias(size_col),
+        "start_bytes",
+        F.expr(f"start_bytes div {int(target_bytes)}").alias("grp"),
     )
 
 

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from mopper_spark.scan import exclusive_scan
+
 
 def _lattice(
     df: DataFrame,
@@ -235,47 +237,27 @@ def pareto_front_2d(
     skyline convention.
 
     ``M>`` is computed WITHOUT a single-partition sort over the data:
-    per-distinct-x maxima → range buckets of ``bucket_width`` on the
-    integer x → per-bucket maxima → one exclusive running max over the
-    (tiny) bucket list → within-bucket exclusive running max — the
-    two-phase bucketed-prefix idiom of ``packing.pack_sequences`` and
-    ``graphsig.canonical_blank_labels``; only bucket aggregates ever sit
-    in a single partition.  The oracle side can afford the plain global
-    window, which is exactly what makes the bucketing independently
-    checkable.
+    per-distinct-x maxima, then a descending exclusive running max by
+    ``scan.exclusive_scan`` bucketed by ranges of ``bucket_width`` on the
+    integer x; only bucket aggregates ever sit in a single partition.
+    The oracle side can afford the plain global window, which is exactly
+    what makes the bucketing independently checkable.
 
     Returns the input columns of the front rows, unchanged.
     """
     if bucket_width < 1:
         raise ValueError("pareto_front_2d: bucket_width must be >= 1")
-    from pyspark.sql import Window
-
     x, y = F.col(x_col).cast("long"), F.col(y_col).cast("long")
     pts = df.select(x.alias("_x"), y.alias("_y"), "*")
     g = pts.groupBy("_x").agg(F.max("_y").alias("_gy"))
-    g = g.withColumn("_bkt", F.expr(f"_x div {int(bucket_width)}"))
-    bmax = g.groupBy("_bkt").agg(F.max("_gy").alias("_bmax"))
-    w_b = (
-        Window.orderBy(F.desc("_bkt"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bpre = bmax.withColumn("_bpre", F.max("_bmax").over(w_b))
-    w_x = (
-        Window.partitionBy("_bkt")
-        .orderBy(F.desc("_x"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    gm = (
-        g.join(bpre.select("_bkt", "_bpre"), "_bkt")
-        .withColumn("_inpre", F.max("_gy").over(w_x))
-        .select(
-            "_x",
-            "_gy",
-            # greatest() skips NULLs (returns NULL only when both are) —
-            # same semantics in DuckDB, so the no-points-to-the-right case
-            # flows through as NULL on both sides
-            F.greatest("_bpre", "_inpre").alias("_mgt"),
-        )
+    # _mgt is NULL when nothing lies to the right (the max identity),
+    # the same NULL the oracle's global window gives
+    gm = exclusive_scan(
+        g,
+        F.expr(f"_x div {int(bucket_width)}"),
+        ["_x"],
+        maxes={"_mgt": "_gy"},
+        descending=True,
     )
     out = (
         pts.join(gm, "_x")

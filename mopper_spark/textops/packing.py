@@ -6,27 +6,22 @@ token stream is sliced into fixed-length training sequences.  The hard part
 distributed is the GLOBAL token offset of every document — a prefix sum
 over a corpus-ordered sequence, which Spark has no native operator for.
 
-Classic two-phase scan, made deterministic:
-
-1. documents land in FIXED id-range buckets (``doc_id div bucket_size`` —
-   unlike ``repartitionByRange``, whose sampled boundaries differ run to
-   run, this bucketing is a pure function of the id);
-2. per-bucket token totals (one tiny combine-able aggregate) are cumsummed
-   into bucket offsets — a ~|corpus|/bucket_size-row table, handled with a
-   single window pass (for 10¹²-doc corpora, raise ``bucket_size`` so this
-   stays millions of rows, or apply the same trick one more level —
-   the scan composes);
-3. bucket offsets broadcast back; within-bucket offsets are a window
-   cumsum ordered by doc_id INSIDE each bucket — bounded partitions, no
-   global sort anywhere.
+The offset is ``scan.exclusive_scan`` over doc_id, bucketed by FIXED
+id ranges (``doc_id div bucket_size``): unlike ``repartitionByRange``,
+whose sampled boundaries differ run to run, the bucket is a pure
+function of the id, and the bucket list has one row per occupied id
+range, |corpus|/bucket_size for dense ids (for 10¹²-doc corpora,
+raise ``bucket_size`` so it stays millions of rows).
 
 Everything is integer arithmetic — bit-stable under any partitioning.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from mopper_spark.scan import exclusive_scan
 
 
 def pack_sequences(
@@ -51,41 +46,23 @@ def pack_sequences(
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         F.size(toks).cast("long").alias("n_tokens"),
-    ).withColumn("bucket", F.expr(f"doc_id div {int(bucket_size)}"))
-
-    bucket_w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    bucket_offsets = (
-        base.groupBy("bucket")
-        .agg(F.sum("n_tokens").alias("bucket_total"))
-        .withColumn(
-            "bucket_offset",
-            F.coalesce(F.sum("bucket_total").over(bucket_w), F.lit(0)).cast("long"),
-        )
-        .select("bucket", "bucket_offset")
     )
-
-    in_bucket_w = (
-        Window.partitionBy("bucket")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    placed = exclusive_scan(
+        base,
+        F.expr(f"doc_id div {int(bucket_size)}"),
+        ["doc_id"],
+        sums={"start_tok": "n_tokens"},
     )
-    start = F.col("bucket_offset") + F.coalesce(
-        F.sum("n_tokens").over(in_bucket_w), F.lit(0)
-    ).cast("long")
-    return (
-        base.join(F.broadcast(bucket_offsets), "bucket")
-        .withColumn("start_tok", start)
-        .select(
-            "doc_id",
-            "n_tokens",
-            "start_tok",
-            # integer `div`, not floor(double /): stays exact past 2^53
-            F.when(
-                F.col("n_tokens") > 0, F.expr(f"start_tok div {seq_len}")
-            ).alias("seq_first"),
-            F.when(
-                F.col("n_tokens") > 0,
-                F.expr(f"(start_tok + n_tokens - 1) div {seq_len}"),
-            ).alias("seq_last"),
-        )
+    return placed.select(
+        "doc_id",
+        "n_tokens",
+        "start_tok",
+        # integer `div`, not floor(double /): stays exact past 2^53
+        F.when(
+            F.col("n_tokens") > 0, F.expr(f"start_tok div {seq_len}")
+        ).alias("seq_first"),
+        F.when(
+            F.col("n_tokens") > 0,
+            F.expr(f"(start_tok + n_tokens - 1) div {seq_len}"),
+        ).alias("seq_last"),
     )

@@ -213,8 +213,7 @@ def budget_sample(
     re-drawable with a new seed — the two properties mixture reruns need.
     The cumulative sum is a window per GROUP (groups = sources, a handful
     at corpus scale — each window partition is one source, spillable;
-    for a single giant source fall back to the bucketed prefix sum of
-    ``packing.py``).
+    for a single giant source fall back to ``scan.exclusive_scan``).
     """
     if not budgets:
         raise ValueError("budget_sample: empty budgets dict")

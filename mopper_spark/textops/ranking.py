@@ -28,6 +28,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mopper_spark.scan import exclusive_scan
 from mopper_spark.textops.analysis import tokens
 
 
@@ -453,8 +454,8 @@ def tfidf_cosine_pairs(
         .agg(F.sum(F.col("wa") * F.col("wb")).cast("long").alias("dot_fp"))
     )
     return (
-        dots.join(F.broadcast(norms.withColumnRenamed("id", "id_a").withColumnRenamed("nrm", "norm_a_fp")), "id_a")
-        .join(F.broadcast(norms.withColumnRenamed("id", "id_b").withColumnRenamed("nrm", "norm_b_fp")), "id_b")
+        dots.join(norms.toDF("id_a", "norm_a_fp"), "id_a")
+        .join(norms.toDF("id_b", "norm_b_fp"), "id_b")
         .withColumn(
             "cos",
             F.col("dot_fp")
@@ -756,15 +757,18 @@ def perplexity_buckets(
     EXCLUDED (no evidence to band on — score them by a unigram fallback
     upstream if they matter).
 
-    One LM scoring pass + one corpus-wide rank.  The rank is a single
-    ORDER BY window at this fixture scale; at 10¹²-doc scale swap it
-    for the bucketed prefix-sum idiom (``packing.pack_sequences``) —
-    the banding rule itself is already integer-exact either way.
+    One LM scoring pass + one corpus-wide rank.  The rank and the corpus
+    size come from ``scan.exclusive_scan`` bucketed by ``xm_fp div
+    10^6`` (whole milli-nats).  Every per-bigram log-probability lies in
+    ``[ln(0.4 / (N + V)), 0]`` for a train corpus of N tokens and V
+    distinct tokens, so ``0 <= xm_fp <= 10^9 · ln((N + V) / 0.4) + 1000``
+    and the bucket list has at most ``1000 · ln((N + V) / 0.4) + 2``
+    rows: under 45,000 for any N + V that fits a BIGINT.  A NULL
+    ``xm_fp`` (an empty train corpus) takes bucket -1, first, as the
+    global order puts it.
     """
     if n_buckets < 2:
         raise ValueError("perplexity_buckets: n_buckets must be >= 2")
-    from pyspark.sql import Window
-
     scored = bigram_backoff_xent(
         train, score, text_col=text_col, id_col=id_col
     ).filter(F.col("n_bigrams") > 0)
@@ -773,16 +777,18 @@ def perplexity_buckets(
         "n_bigrams",
         F.expr("(-sum_lp_fp * 1000) div n_bigrams").alias("xm_fp"),
     )
-    w = Window.orderBy(F.col("xm_fp").asc(), F.col("doc_id").asc())
-    return (
-        xm.withColumn("rn", F.row_number().over(w))
-        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()))
-        .select(
-            "doc_id",
-            "n_bigrams",
-            "xm_fp",
-            F.expr(f"({int(n_buckets)} * (rn - 1)) div n")
-            .cast("long")
-            .alias("bucket"),
-        )
+    ranked = exclusive_scan(
+        xm,
+        F.expr("coalesce(xm_fp div 1000000, -1)"),
+        ["xm_fp", "doc_id"],
+        sums={"_below": F.lit(1)},
+        totals={"_n": F.lit(1)},
+    )
+    return ranked.select(
+        "doc_id",
+        "n_bigrams",
+        "xm_fp",
+        F.expr(f"({int(n_buckets)} * _below) div _n")
+        .cast("long")
+        .alias("bucket"),
     )

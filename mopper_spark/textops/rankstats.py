@@ -21,12 +21,10 @@ Scale shape (the part Spark has to get right):
 - Rank statistics need an ORDERED prefix over the *distinct values*,
   not over the rows.  Both U and the 2x-midranks collapse the corpus to
   per-distinct-value counts first (combine-able groupBy — the shuffle
-  carries one row per distinct value), then run the two-phase bucketed
-  exclusive prefix sum of ``olap.pareto_front_2d`` /
-  ``packing.pack_sequences``: range-bucket the integer value, per-bucket
-  subtotals, one running sum over the (tiny) bucket list, a
-  within-bucket window.  No global single-partition sort ever sees
-  row-shaped data.
+  carries one row per distinct value), then take the exclusive prefix
+  sum with ``scan.exclusive_scan``, bucketed by integer value range
+  (``bucket_width`` distinct values or fewer per bucket).  No global
+  single-partition sort ever sees row-shaped data.
 - Kendall's concordance needs value *pairs*: the corpus is collapsed to
   ``(x, y)`` cells and the quadratic work runs over cells, not rows —
   the caller is expected to hand in bucketed metrics (the use case) so
@@ -42,59 +40,18 @@ from obey the same bound.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mopper_spark.scan import exclusive_scan
 
-def _exclusive_prefix(
-    per_value: DataFrame,
-    value_col: str,
-    sum_cols: list[str],
-    *,
-    bucket_width: int = 64,
-) -> DataFrame:
-    """Exclusive prefix sums of ``sum_cols`` over ``per_value`` ordered by
-    the integer ``value_col`` — two-phase bucketed, so only per-bucket
-    subtotals (one row per ``bucket_width`` distinct values) ever cross a
-    single-partition window.  Adds ``_pre_<col>`` columns (0 when nothing
-    precedes)."""
-    from pyspark.sql import Window
 
+def _value_bucket(bucket_width: int) -> Column:
+    """Range bucket of the integer ``_v``: floor-divide (not ``div``) so
+    negative values bucket monotonically."""
     if bucket_width < 1:
-        raise ValueError("_exclusive_prefix: bucket_width must be >= 1")
-    v = F.col(value_col).cast("long")
-    # floor-divide (not `div`) so negative values bucket monotonically
-    g = per_value.withColumn(
-        "_bkt", F.floor(v / F.lit(int(bucket_width))).cast("long")
-    )
-    bsub = g.groupBy("_bkt").agg(
-        *[F.sum(c).cast("long").alias(f"_bsum_{c}") for c in sum_cols]
-    )
-    w_b = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    bpre = bsub.select(
-        "_bkt",
-        *[
-            F.coalesce(F.sum(f"_bsum_{c}").over(w_b), F.lit(0))
-            .cast("long")
-            .alias(f"_bpre_{c}")
-            for c in sum_cols
-        ],
-    )
-    w_in = (
-        Window.partitionBy("_bkt")
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    out = g.join(bpre, "_bkt")
-    for c in sum_cols:
-        out = out.withColumn(
-            f"_pre_{c}",
-            (
-                F.col(f"_bpre_{c}")
-                + F.coalesce(F.sum(c).over(w_in), F.lit(0))
-            ).cast("long"),
-        )
-    return out.drop("_bkt", *[f"_bpre_{c}" for c in sum_cols])
+        raise ValueError("rankstats: bucket_width must be >= 1")
+    return F.floor(F.col("_v") / F.lit(int(bucket_width))).cast("long")
 
 
 def mann_whitney_u(
@@ -129,7 +86,9 @@ def mann_whitney_u(
             F.sum(1 - F.col("_ia")).cast("long").alias("_nb"),
         )
     )
-    pre = _exclusive_prefix(per_v, "_v", ["_nb"], bucket_width=bucket_width)
+    pre = exclusive_scan(
+        per_v, _value_bucket(bucket_width), ["_v"], sums={"_pre__nb": "_nb"}
+    )
     t = F.col("_na") + F.col("_nb")
     return pre.agg(
         F.sum("_na").cast("long").alias("n_a"),
@@ -185,8 +144,11 @@ def ks_statistic(
             F.sum(1 - F.col("_ia")).cast("long").alias("_nb"),
         )
     )
-    pre = _exclusive_prefix(
-        per_v, "_v", ["_na", "_nb"], bucket_width=bucket_width
+    pre = exclusive_scan(
+        per_v,
+        _value_bucket(bucket_width),
+        ["_v"],
+        sums={"_pre__na": "_na", "_pre__nb": "_nb"},
     ).localCheckpoint(eager=True)
     totals = pre.agg(
         F.sum("_na").cast("long").alias("n_a"),
@@ -241,7 +203,9 @@ def gini_terms(df: DataFrame, value_col: str, *, bucket_width: int = 64) -> Data
         .groupBy("_v")
         .agg(F.count(F.lit(1)).cast("long").alias("_m"))
     )
-    pre = _exclusive_prefix(per_v, "_v", ["_m"], bucket_width=bucket_width)
+    pre = exclusive_scan(
+        per_v, _value_bucket(bucket_width), ["_v"], sums={"_pre__m": "_m"}
+    )
     return pre.agg(
         F.sum("_m").cast("long").alias("n"),
         F.sum(F.col("_m") * F.col("_v")).cast("long").alias("total"),
@@ -276,61 +240,33 @@ def grouped_midrank(
     calibration ("a 0.7 quality score means top-12% in src0 but top-40%
     in src3").
 
-    Same two-phase bucketed prefix as ``mann_whitney_u`` but PARTITIONED
-    by group: per-(group, bucket) subtotals, a per-group running sum over
-    the tiny bucket list, a within-bucket window — no global or
-    group-global single-partition pass ever sees value-shaped data; the
-    group totals ride back on a broadcast join (group cardinality is the
-    small dimension by assumption).
+    Same ``exclusive_scan`` as ``mann_whitney_u`` but PARTITIONED by
+    group: no global or group-global single-partition pass ever sees
+    value-shaped data, and the group size ``n`` is summed from the
+    per-(group, bucket) subtotals.
 
     Output: ``(group_col, value_col, m, rank2, n)`` per distinct pair.
     """
-    from pyspark.sql import Window
-
-    if bucket_width < 1:
-        raise ValueError("grouped_midrank: bucket_width must be >= 1")
     g, v = F.col(group_col), F.col(value_col).cast("long")
     per_v = (
         df.select(g.alias("_g"), v.alias("_v"))
         .groupBy("_g", "_v")
         .agg(F.count(F.lit(1)).cast("long").alias("m"))
-        .withColumn(
-            "_bkt", F.floor(F.col("_v") / F.lit(int(bucket_width))).cast("long")
-        )
     )
-    bsub = per_v.groupBy("_g", "_bkt").agg(F.sum("m").alias("_bm"))
-    w_b = (
-        Window.partitionBy("_g")
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    ranked = exclusive_scan(
+        per_v,
+        _value_bucket(bucket_width),
+        ["_v"],
+        sums={"_below": "m"},
+        totals={"n": "m"},
+        partition_by=["_g"],
     )
-    bpre = bsub.select(
-        "_g",
-        "_bkt",
-        F.coalesce(F.sum("_bm").over(w_b), F.lit(0)).cast("long").alias("_bpre"),
-    )
-    w_in = (
-        Window.partitionBy("_g", "_bkt")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    totals = per_v.groupBy("_g").agg(F.sum("m").cast("long").alias("n"))
-    return (
-        per_v.join(bpre, ["_g", "_bkt"])
-        .withColumn(
-            "_below",
-            F.col("_bpre") + F.coalesce(F.sum("m").over(w_in), F.lit(0)),
-        )
-        .join(F.broadcast(totals), "_g")
-        .select(
-            F.col("_g").alias(group_col),
-            F.col("_v").alias(value_col),
-            "m",
-            (F.lit(2) * F.col("_below") + F.col("m") + 1)
-            .cast("long")
-            .alias("rank2"),
-            "n",
-        )
+    return ranked.select(
+        F.col("_g").alias(group_col),
+        F.col("_v").alias(value_col),
+        "m",
+        (F.lit(2) * F.col("_below") + F.col("m") + 1).cast("long").alias("rank2"),
+        "n",
     )
 
 
@@ -344,7 +280,9 @@ def _with_r2(
         df.groupBy(F.col(col).cast("long").alias("_v"))
         .agg(F.count(F.lit(1)).cast("long").alias("_cnt"))
     )
-    pre = _exclusive_prefix(per_v, "_v", ["_cnt"], bucket_width=bucket_width)
+    pre = exclusive_scan(
+        per_v, _value_bucket(bucket_width), ["_v"], sums={"_pre__cnt": "_cnt"}
+    )
     ranks = pre.select(
         F.col("_v").alias(col),
         (2 * F.col("_pre__cnt") + F.col("_cnt") + 1).cast("long").alias(out),

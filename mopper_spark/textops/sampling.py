@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mopper_spark.scan import exclusive_scan
+
 BUCKETS = 65536  # 16 bits of md5
 
 
@@ -136,8 +138,9 @@ def stratified_split(
     Scale shape: ONE row_number window partitioned by stratum plus a
     broadcast of per-stratum counts.  Strata are bounded (sources,
     languages), so per-partition volume is corpus/n_strata and the rank
-    window spills; for a corpus with a single giant stratum use the
-    bucketed prefix-sum idiom of textops/packing.py instead of a window.
+    window spills; for a corpus with a single giant stratum rank with
+    ``scan.exclusive_scan`` (as ``shuffle_rank`` does) instead of a
+    window.
     """
     if splits is None:
         splits = {"train": 0.8, "val": 0.1, "test": 0.1}
@@ -316,38 +319,25 @@ def shuffle_rank(
     one ROW_NUMBER), and changing the seed draws a fresh independent
     permutation.
 
-    No global sort: ranks come from the two-phase bucketed prefix idiom
-    (``packing.pack_sequences``) keyed on the TOP 16 hash bits — md5 is
+    No global sort: the rank is an exclusive count by
+    ``scan.exclusive_scan`` bucketed on the TOP 16 hash bits — md5 is
     uniform, so the 65536 buckets are balanced by construction (no skew
-    caveat, unlike value-bucketed prefixes): per-bucket counts, one
-    running sum over the tiny bucket list, per-bucket ROW_NUMBER windows
-    (spillable, ~corpus/65536 rows each).  The hash string orders ties
-    away except true key duplicates, which ``key`` itself breaks —
-    making the rank total and stable.
+    caveat, unlike value-bucketed scans) and each in-bucket window holds
+    ~corpus/65536 rows.  The hash string orders ties away except true
+    key duplicates, which ``key`` itself breaks — making the rank total
+    and stable.
 
     Returns the input columns plus ``out_col``.
     """
     h = F.md5(F.concat(F.lit(seed), F.col(key).cast("string")))
-    from pyspark.sql import Window
-
-    t = df.withColumn("_h", h).withColumn(
-        "_bkt", F.conv(F.substring("_h", 1, 4), 16, 10).cast("long")
+    t = df.withColumn("_h", h)
+    ranked = exclusive_scan(
+        t,
+        F.conv(F.substring("_h", 1, 4), 16, 10).cast("long"),
+        ["_h", key],
+        sums={out_col: F.lit(1)},
     )
-    bsub = t.groupBy("_bkt").agg(F.count(F.lit(1)).cast("long").alias("_bn"))
-    w_b = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    bpre = bsub.select(
-        "_bkt",
-        F.coalesce(F.sum("_bn").over(w_b), F.lit(0)).cast("long").alias("_bpre"),
-    )
-    w_in = Window.partitionBy("_bkt").orderBy("_h", key)
-    return (
-        t.join(F.broadcast(bpre), "_bkt")
-        .withColumn(
-            out_col,
-            (F.col("_bpre") + F.row_number().over(w_in) - 1).cast("long"),
-        )
-        .drop("_h", "_bkt", "_bpre")
-    )
+    return ranked.drop("_h")
 
 
 HEX12 = 16 ** 12  # 48 bits of md5 — exact in int64 AND in a double

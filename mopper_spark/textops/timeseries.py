@@ -587,9 +587,7 @@ def theil_sen_slope(
         F.col(y_col).cast("long").alias("y"),
     )
     counts = pts.groupBy("key").agg(F.count(F.lit(1)).alias("n_points"))
-    small = pts.join(
-        F.broadcast(counts.filter(F.col("n_points") <= max_points)), "key"
-    )
+    small = pts.join(counts.filter(F.col("n_points") <= max_points), "key")
     l = small.select("key", "n_points", F.col("x").alias("x1"), F.col("y").alias("y1"))
     r = small.select(F.col("key").alias("k2"), F.col("x").alias("x2"), F.col("y").alias("y2"))
     pairs = l.join(
