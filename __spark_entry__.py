@@ -8414,8 +8414,9 @@ def _q_docs_quality_auc(spark: SparkSession, sf: str) -> DataFrame:
     """Model-evaluation AUC (textops/analysis.py::rank_auc): exact
     tie-corrected ROC-AUC of the hashed-linear quality score against the
     lang='en' label, Mann-Whitney integer formulation — numerator and
-    denominator are exact BIGINTs, the single ordered window runs over
-    the (distinct score -> counts) table, not the corpus."""
+    denominator are exact BIGINTs, and the running count of negatives is
+    rankstats.mann_whitney_u's bucketed scan over the (distinct score ->
+    counts) table, not the corpus."""
     from mopper_spark.textops.analysis import rank_auc
     from mopper_spark.textops.quality_model import quality_scores
 

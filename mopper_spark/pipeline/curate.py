@@ -47,9 +47,6 @@ from pyspark.sql import functions as F
 
 from mopper_spark.scan import exclusive_scan
 
-# 16-bit md5 bucket space, matching textops/sampling.py::hash_bucket
-_IDX_BUCKETS = 65536
-
 
 def predicate_profile(triples: DataFrame) -> DataFrame:
     """Per-predicate stats: ``(pred, n_triples, n_subj, n_obj,

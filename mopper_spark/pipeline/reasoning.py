@@ -28,9 +28,9 @@ explicitly broadcast — every rule is a broadcast hash join against the
 instance triples, no instance-sized shuffle anywhere; the two transitive
 closures run semi-naive over schema-sized edge lists
 (pipeline/graph.py::transitive_closure).  Per-round lineage is cut with
-eager local checkpoints under the same scoped
-constraintPropagation=false workaround as transitive_closure (Spark 4.1
-mis-rewrites Union constraints over checkpointed LogicalRDD children).
+eager local checkpoints inside ``graph._constraint_propagation_off``
+(Spark 4.1 mis-rewrites Union constraints over checkpointed LogicalRDD
+children; the engine note is there).
 """
 
 from __future__ import annotations
@@ -39,7 +39,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mopper_spark.pipeline.cc import connected_components
-from mopper_spark.pipeline.graph import transitive_closure
+from mopper_spark.pipeline.graph import (
+    _constraint_propagation_off,
+    _doubling_closure,
+    transitive_closure,
+)
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 RDFS_NS = "http://www.w3.org/2000/01/rdf-schema#"
@@ -121,13 +125,8 @@ def _rdfs_pass(g: DataFrame) -> DataFrame:
 
 def _fixpoint(triples: DataFrame, pass_fn, max_rounds: int, label: str) -> DataFrame:
     """Run a monotone staged pass to count-stability with per-round eager
-    checkpoints, under the scoped Spark 4.1 constraint-propagation
-    workaround (see transitive_closure's engine note)."""
-    spark = triples.sparkSession
-    conf_key = "spark.sql.constraintPropagation.enabled"
-    old = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "false")
-    try:
+    checkpoints, inside ``graph._constraint_propagation_off``."""
+    with _constraint_propagation_off(triples.sparkSession):
         g = triples.select(*_SPO).distinct().localCheckpoint(eager=True)
         n = g.count()
         for _ in range(max_rounds):
@@ -141,8 +140,6 @@ def _fixpoint(triples: DataFrame, pass_fn, max_rounds: int, label: str) -> DataF
             "the schema feeds earlier strata (RDFS/OWL vocabulary "
             "redefined) — raise max_rounds"
         )
-    finally:
-        spark.conf.set(conf_key, old)
 
 
 def rdfs_entailment(triples: DataFrame, *, max_rounds: int = 4) -> DataFrame:
@@ -199,7 +196,6 @@ def rdfs_entailment_delta(
     (e.g. some p ⊑ rdf:type) makes round-1 inferences feed rdfs7
     again, and the loop chases that to the exact fixpoint.
     """
-    spark = base_closed.sparkSession
     bad = (
         delta.filter(F.col("pred").isin(*_RDFS_VOCAB))
         .select("pred")
@@ -213,10 +209,7 @@ def rdfs_entailment_delta(
             f"({sorted(r.pred for r in bad)}); schema changes invalidate "
             "incremental maintenance — recompute with rdfs_entailment"
         )
-    conf_key = "spark.sql.constraintPropagation.enabled"
-    old = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "false")
-    try:
+    with _constraint_propagation_off(base_closed.sparkSession):
         # Schema relations read pre-closed from the base; final for the
         # whole run (instance deltas cannot extend them — see above).
         spc = base_closed.filter(F.col("pred") == RDFS_SUBPROP).select(
@@ -288,8 +281,6 @@ def rdfs_entailment_delta(
             "passes; the base schema feeds earlier strata (RDF/RDFS "
             "vocabulary redefined) — raise max_rounds"
         )
-    finally:
-        spark.conf.set(conf_key, old)
 
 
 # --------------------------------------------------------------------------
@@ -303,44 +294,6 @@ OWL_TRANSITIVE = OWL_NS + "TransitiveProperty"
 OWL_EQ_PROPERTY = OWL_NS + "equivalentProperty"
 OWL_EQ_CLASS = OWL_NS + "equivalentClass"
 OWL_SAMEAS = OWL_NS + "sameAs"
-
-
-def _keyed_closure(tedges: DataFrame, *, max_iters: int = 20) -> DataFrame:
-    """Per-predicate transitive closure over (pred, src, dst) edges by
-    recursive path doubling (reachable distance doubles each round, so
-    convergence in ceil(log2(diameter)) rounds — transcripts chain
-    hundreds of turns deep, where semi-naive's diameter-many rounds would
-    dominate wall clock).  Same per-round lineage-cut discipline as
-    transitive_closure(method="doubling"); the caller holds the
-    constraintPropagation scope."""
-    e = tedges.select("pred", "src", "dst").distinct().localCheckpoint(eager=False)
-    closure = e
-    for _ in range(max_iters):
-        hop = (
-            closure.alias("a")
-            .join(
-                closure.alias("b"),
-                (F.col("a.pred") == F.col("b.pred"))
-                & (F.col("a.dst") == F.col("b.src")),
-            )
-            .select(
-                F.col("a.pred").alias("pred"),
-                F.col("a.src").alias("src"),
-                F.col("b.dst").alias("dst"),
-            )
-        )
-        new = (
-            hop.join(closure, ["pred", "src", "dst"], "left_anti")
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        if new.isEmpty():
-            return closure.localCheckpoint(eager=True)
-        closure = closure.unionAll(new).localCheckpoint(eager=False)
-    raise RuntimeError(
-        f"_keyed_closure did not converge in {max_iters} doubling rounds "
-        f"(= diameter 2^{max_iters})"
-    )
 
 
 def _owl_pass(g: DataFrame) -> DataFrame:
@@ -363,7 +316,9 @@ def _owl_pass(g: DataFrame) -> DataFrame:
     closure over the reversed edges).  Schema relations (inverse pairs,
     property-type sets) are broadcast; prp-trp's instance-level closure
     is the only super-linear stage and runs keyed per predicate in
-    log(diameter) doubling rounds."""
+    log(diameter) doubling rounds (``graph._doubling_closure``:
+    transcripts chain hundreds of turns deep, where semi-naive's
+    diameter-many rounds would dominate wall clock)."""
     eqp = g.filter(F.col("pred") == OWL_EQ_PROPERTY)
     eqp_sub = eqp.select(
         "subj", F.lit(RDFS_SUBPROP).alias("pred"), "obj"
@@ -395,7 +350,7 @@ def _owl_pass(g: DataFrame) -> DataFrame:
     tedges = g.join(F.broadcast(tp), g["pred"] == tp["p"]).select(
         "pred", F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
-    r_trp = _keyed_closure(tedges).select(
+    r_trp = _doubling_closure(tedges, ("pred",), max_iters=20).select(
         F.col("src").alias("subj"), "pred", F.col("dst").alias("obj")
     )
     g = g.unionByName(r_trp).distinct().localCheckpoint(eager=False)
@@ -509,7 +464,7 @@ def rdf_list_members(
     early exit on an empty frontier, hard stop at ``max_len`` (named
     cap: deeper lists are truncated — well-formed RDF lists at 100 TB
     are shallow; a pathological million-element chain needs the
-    path-doubling treatment of ``graph.transitive_closure``, not this).
+    path-doubling treatment of ``graph._doubling_closure``, not this).
     Cycles through ``rdf:rest`` (malformed RDF) terminate at the cap
     instead of looping, and a fork (a cell with two ``rdf:rest`` out-
     edges, also malformed) walks both branches — emission, not

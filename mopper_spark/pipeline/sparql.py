@@ -100,6 +100,7 @@ from .bgp import (
     bgp_union,
     bgp_values,
 )
+from ..serializer import _sql_text
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -506,13 +507,13 @@ class _Parser:
             elif k == "VAR":
                 parts.append(v[1:])
             elif k == "STRING":
-                parts.append(_sql_str(_unescape(v)))
+                parts.append(_sql_text(_unescape(v)))
             elif k == "NUM":
                 parts.append(v)
             elif k == "IRI":
-                parts.append(_sql_str(v[1:-1]))
+                parts.append(_sql_text(v[1:-1]))
             elif k == "PNAME":
-                parts.append(_sql_str(self._expand_pname(v)))
+                parts.append(_sql_text(self._expand_pname(v)))
             elif (k, v) == ("OP", "&&"):
                 parts.append("AND")
             elif (k, v) == ("OP", "||"):
@@ -783,7 +784,7 @@ class _Parser:
             self.expect_op(")")
             collect = "collect_set" if distinct else "collect_list"
             return (
-                f"array_join(array_sort({collect}({inner})), {_sql_str(sep)})"
+                f"array_join(array_sort({collect}({inner})), {_sql_text(sep)})"
             )
         self.expect_op(")")
         if fn == "SAMPLE":
@@ -805,10 +806,6 @@ def _unescape(quoted: str) -> str:
     )
 
 
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 # --------------------------------------------------------------------------
 # compilation: element list → DataFrame
 # --------------------------------------------------------------------------
@@ -821,7 +818,7 @@ def _ground_to_probe(pattern: tuple, idx: int) -> tuple[tuple, str]:
     and the helper column is dropped after compilation."""
     var = f"?__const{idx}"
     rewritten = (*pattern[:2], var, *pattern[3:])
-    return rewritten, f"__const{idx} = {_sql_str(pattern[2])}"
+    return rewritten, f"__const{idx} = {_sql_text(pattern[2])}"
 
 
 def _compile_group(

@@ -361,8 +361,8 @@ def temporal_reachability(
     keeps strict improvements via a combine-able ``min`` aggregate +
     anti-comparison against the known table, and stops when no arrival
     improves or at ``max_hops`` (named cap — temporal diameters are
-    short in practice; deep chains want the same path-doubling
-    treatment as ``graph.transitive_closure``).  Per-round lineage is
+    short in practice; deep chains want path doubling, as in
+    ``graph._doubling_closure``).  Per-round lineage is
     cut with ``localCheckpoint``; shuffles are edge-keyed joins only.
     """
     if max_hops < 1:

@@ -31,9 +31,10 @@ chooses it.
 Identities: a ``sum`` with nothing before is 0 (BIGINT); a ``max`` with
 nothing before is NULL.  A rank is an exclusive count: the ``sum`` of 1.
 
-NULLs: the join back is an equi-join, so a row whose bucket or partition
-value is NULL is not returned; its subtotal still takes part in phase
-two, where an ascending order puts the NULL bucket first.
+NULLs: the join back is null-safe on the partition and bucket keys, so
+every input row is returned.  A NULL partition value is one partition,
+and a NULL bucket keeps its phase-two place: first when ascending, last
+when descending.
 """
 
 from __future__ import annotations
@@ -119,7 +120,10 @@ def exclusive_scan(
         subtotals.append(sub.alias(s))
         offsets.append(off.alias(s))
         outs.append(res.alias(out))
-    per_bucket = rows.groupBy(*keys).agg(*subtotals).select(*keys, *offsets)
-    return rows.join(per_bucket, keys).select(
+    per_bucket = rows.groupBy(*keys).agg(*subtotals).select(
+        *[_quoted(k).alias(f"_scan_k{j}") for j, k in enumerate(keys)], *offsets
+    )
+    on = [_quoted(k).eqNullSafe(F.col(f"_scan_k{j}")) for j, k in enumerate(keys)]
+    return rows.join(per_bucket, on).select(
         *[_quoted(c) for c in df.columns], *outs
     )

@@ -203,8 +203,6 @@ _JOIN_RE = re.compile(
 )
 _OBJ_LIT_RE = re.compile(r'^"([^"]*)"(?:\s*(?:@\w+|\^\^\S+))?$')
 _OBJ_CONST_RE = re.compile(r"^(\w*):(\w[\w\-.]*)$")
-#: one term of a string operation: a [expr.field] slot or a "literal"
-_CONCAT_TERM_RE = re.compile(r'\[?(\w+)\.((?:\w+\.)*\w+)\]?|"([^"]*)"')
 
 
 @dataclass

@@ -127,7 +127,7 @@ def _json_iterate(
         if bracket and bracket != "[*]":
             # filtered iteration: native array filter, then explode
             pred = (
-                (lambda x: x[filt_key] == F.expr(filt_val))
+                (lambda x: x[filt_key] == F.lit(filt_val[1:-1]))
                 if filt_val is not None
                 else (lambda x: x[filt_key].isNotNull())
             )
@@ -178,7 +178,7 @@ def _json_iterate(
                 fk, fv = m.group(3), m.group(4)
                 arr_col = F.filter(
                     arr_col,
-                    (lambda x: x[fk] == F.expr(fv))
+                    (lambda x: x[fk] == F.lit(fv[1:-1]))
                     if fv is not None
                     else (lambda x: x[fk].isNotNull()),
                 )

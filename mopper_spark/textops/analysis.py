@@ -9,6 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
+
+from mopper_spark.textops.rankstats import mann_whitney_u
 
 # tiny per-language stopword profiles for the n-gram/stopword heuristic
 _LANG_PROFILES: dict[str, list[str]] = {
@@ -787,56 +790,45 @@ def skew_profile(
 def rank_auc(df: DataFrame, score_col: str, label_col) -> DataFrame:
     """Exact tie-corrected ROC-AUC (the Mann-Whitney U formulation) of a
     score against a binary label, in pure integers until the final
-    division: grouped by distinct score, ``AUC = Σ_g (2·pos_g·neg_below_g
-    + pos_g·neg_g) / (2·n_pos·n_neg)`` — strictly-lower negatives count
-    fully, tied negatives count half (the standard ½ tie credit), and the
-    numerator/denominator are exact BIGINTs so the statistic is identical
-    under any partitioning and in any engine.  Overflow bound:
-    ``2·n_pos·n_neg ≤ n²`` — fits int64 up to n ≈ 3·10⁹ labeled rows.
+    division: ``auc_num2x`` is ``rankstats.mann_whitney_u``'s ``u2x_a``
+    with the positives as group A, i.e. ``Σ_g (2·pos_g·neg_below_g +
+    pos_g·neg_g)`` over distinct scores — strictly-lower negatives count
+    fully, tied negatives count half (the standard ½ tie credit) — and
+    ``AUC = auc_num2x / (2·n_pos·n_neg)``.  The numerator and denominator
+    are exact BIGINTs, so the statistic is identical under any
+    partitioning and in any engine.  Overflow bound: ``2·n_pos·n_neg ≤
+    n²`` — fits int64 up to n ≈ 3·10⁹ labeled rows.
 
-    ``label_col``: a boolean/0-1 column name or Column (e.g.
-    ``F.col("lang") == "en"``).
+    ``score_col`` must be integral (``mann_whitney_u`` scans BIGINT
+    values): bin continuous scores first; anything else raises a
+    ``ValueError``.  A row with a NULL score is dropped; a NULL label
+    counts as a negative.  ``label_col``: a boolean/0-1 column name or
+    Column (e.g. ``F.col("lang") == "en"``).
 
     Returns ONE row ``(n_pos, n_neg, auc_num2x, auc)``.
-
-    Scale shape: one keyed aggregation to the (distinct score → counts)
-    table, then ONE ordered window over that reduced table — its
-    cardinality is #distinct scores, not corpus size (integer model
-    scores keep it small; bin continuous scores first), which is the same
-    reduced-cardinality discipline as the exact global quantiles.
     """
-    from pyspark.sql import Window
-
-    label = F.col(label_col) if isinstance(label_col, str) else label_col
-    g = (
-        df.groupBy(F.col(score_col).alias("score"))
-        .agg(
-            F.sum(label.cast("long")).alias("pos_g"),
-            F.count("*").alias("n_g"),
+    if not isinstance(df.schema[score_col].dataType, IntegralType):
+        raise ValueError(
+            f"rank_auc: score column {score_col!r} is "
+            f"{df.schema[score_col].dataType.simpleString()}, not integral; "
+            "bin continuous scores first"
         )
-        .withColumn("neg_g", F.col("n_g") - F.col("pos_g"))
+    label = F.col(label_col) if isinstance(label_col, str) else label_col
+    u = mann_whitney_u(
+        df.select(F.col(score_col).alias("score"), label.alias("label")),
+        "score",
+        "label",
     )
-    w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, -1)
-    per = g.withColumn("neg_below", F.coalesce(F.sum("neg_g").over(w), F.lit(0)))
-    num2x = F.sum(
-        F.lit(2) * F.col("pos_g") * F.col("neg_below")
-        + F.col("pos_g") * F.col("neg_g")
-    )
-    agg = per.agg(
-        F.sum("pos_g").cast("long").alias("n_pos"),
-        F.sum("neg_g").cast("long").alias("n_neg"),
-        num2x.cast("long").alias("auc_num2x"),
-    )
-    return agg.select(
-        "n_pos",
-        "n_neg",
-        "auc_num2x",
+    return u.select(
+        F.col("n_a").alias("n_pos"),
+        F.col("n_b").alias("n_neg"),
+        F.col("u2x_a").alias("auc_num2x"),
         F.round(
-            F.col("auc_num2x").cast("double")
+            F.col("u2x_a").cast("double")
             / (
                 F.lit(2.0)
-                * F.col("n_pos").cast("double")
-                * F.col("n_neg").cast("double")
+                * F.col("n_a").cast("double")
+                * F.col("n_b").cast("double")
             ),
             6,
         ).alias("auc"),

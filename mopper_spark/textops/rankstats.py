@@ -72,6 +72,9 @@ def mann_whitney_u(
     tie-corrected variance ``sigma^2 = nA*nB/12 * ((n+1) - tie_cubes /
     (n*(n-1)))`` consumer-side.
 
+    A row whose value is NULL is dropped before counting: a missing
+    measurement is not an observation.
+
     Returns ``(n_a, n_b, u2x_a, u2x_b, tie_cubes)``.
     """
     a = F.col(group_col).cast("boolean")
@@ -80,6 +83,7 @@ def mann_whitney_u(
             F.col(value_col).cast("long").alias("_v"),
             F.when(a, F.lit(1)).otherwise(F.lit(0)).alias("_ia"),
         )
+        .filter(F.col("_v").isNotNull())
         .groupBy("_v")
         .agg(
             F.sum("_ia").cast("long").alias("_na"),

@@ -650,6 +650,18 @@ class TestSeededClosure:
         seeds = spark.createDataFrame([("b",), ("z",)], "origin string")
         assert closure_from(edges, seeds).count() == 0
 
+    def test_closure_from_cone_depth_equal_to_max_iters(self, spark):
+        # a 5-edge chain: the first frontier holds hop 1, rounds 1..4 add
+        # hops 2..5 and round 5 derives nothing, so max_iters=5 suffices
+        from mopper_spark.pipeline.graph import closure_from
+
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(5)], "src long, dst long"
+        )
+        seeds = spark.createDataFrame([(0,)], "origin long")
+        got = {(r.origin, r.node) for r in closure_from(edges, seeds, max_iters=5).collect()}
+        assert got == {(0, n) for n in range(1, 6)}
+
 
 def test_kg_query_cli_aggregation(spark, tmp_path):
     import argparse

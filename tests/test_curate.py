@@ -12,7 +12,7 @@ from mopper_spark.pipeline.curate import (
     predicate_profile,
     resolve_functional,
 )
-from mopper_spark.pipeline.graph import transitive_closure
+from mopper_spark.pipeline.graph import _doubling_closure, transitive_closure
 
 TRIPLES = [
     ("s1", "p1", "a"),
@@ -136,11 +136,28 @@ class TestTransitiveClosure:
         assert got == _py_closure({(1, 2), (2, 3), (3, 1), (3, 4)})
         assert (1, 1) in got  # cycle members reach themselves
 
-    def test_constraint_conf_restored(self, spark):
+    @pytest.mark.parametrize(
+        "run", ["transitive_closure", "transitive_closure_delta", "owl_rl_lite"]
+    )
+    def test_constraint_conf_restored(self, spark, run):
+        # the delta and OWL paths nest the guard (the doubling kernel
+        # holds it inside its caller's block)
+        from mopper_spark.pipeline.graph import transitive_closure_delta
+        from mopper_spark.pipeline.reasoning import OWL_TRANSITIVE, RDF_TYPE, owl_rl_lite
+
         key = "spark.sql.constraintPropagation.enabled"
         before = spark.conf.get(key)
         df = spark.createDataFrame([(1, 2)], "src long, dst long")
-        transitive_closure(df).count()
+        if run == "transitive_closure":
+            transitive_closure(df).count()
+        elif run == "transitive_closure_delta":
+            d = spark.createDataFrame([(2, 3)], "src long, dst long")
+            transitive_closure_delta(transitive_closure(df), d).count()
+        else:
+            owl_rl_lite(spark.createDataFrame(
+                [("p", RDF_TYPE, OWL_TRANSITIVE), ("a", "p", "b"), ("b", "p", "c")],
+                "subj string, pred string, obj string",
+            )).count()
         assert spark.conf.get(key) == before
 
     def test_nonconvergence_raises(self, spark):
@@ -150,12 +167,15 @@ class TestTransitiveClosure:
 
 
 class TestClosureDoubling:
+    """graph._doubling_closure, the path-doubling kernel behind
+    transitive_closure_delta and OWL prp-trp."""
+
     def test_doubling_equals_seminaive_on_tree(self, spark):
         edges = [(i, i // 2) for i in range(2, 64)]
         df = spark.createDataFrame(edges, "src long, dst long")
         a = {(r.src, r.dst) for r in transitive_closure(df).collect()}
         b = {(r.src, r.dst)
-             for r in transitive_closure(df, method="doubling").collect()}
+             for r in _doubling_closure(df, max_iters=30).collect()}
         assert a == b == _py_closure(set(edges))
 
     def test_doubling_converges_in_log_rounds_on_deep_chain(self, spark):
@@ -167,7 +187,7 @@ class TestClosureDoubling:
         with pytest.raises(RuntimeError, match="converge"):
             transitive_closure(df, max_iters=7)
         got = {(r.src, r.dst)
-               for r in transitive_closure(df, max_iters=7, method="doubling").collect()}
+               for r in _doubling_closure(df, max_iters=7).collect()}
         assert got == _py_closure(set(edges))
 
     def test_doubling_cycle(self, spark):
@@ -175,13 +195,8 @@ class TestClosureDoubling:
             [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
         )
         got = {(r.src, r.dst)
-               for r in transitive_closure(df, method="doubling").collect()}
+               for r in _doubling_closure(df, max_iters=30).collect()}
         assert got == _py_closure({(1, 2), (2, 3), (3, 1), (3, 4)})
-
-    def test_unknown_method_rejected(self, spark):
-        df = spark.createDataFrame([(1, 2)], "src long, dst long")
-        with pytest.raises(ValueError, match="method"):
-            transitive_closure(df, method="magic")
 
 
 class TestTransitiveClosureDelta:

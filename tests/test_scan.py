@@ -74,6 +74,36 @@ def test_exclusive_scan_empty_input(spark):
     assert got.collect() == []
 
 
+def test_null_bucket_rows_are_returned(spark):
+    # shuffle_rank buckets by the key's hash: a NULL key is a NULL bucket
+    from mopper_spark.textops.sampling import shuffle_rank
+
+    df = spark.createDataFrame([(1,), (2,), (None,)], "k long")
+    got = shuffle_rank(df, "k").collect()
+    assert len(got) == 3
+    ranks = [r[-1] for r in got]
+    assert sorted(ranks) == [0, 1, 2]
+
+
+def test_null_bucket_keeps_its_phase_two_place(spark):
+    df = spark.createDataFrame([(None, 5), (1, 1), (2, 2)], "o long, x long")
+    for descending, want in ((False, {None: 0, 1: 5, 2: 6}), (True, {2: 0, 1: 2, None: 3})):
+        got = exclusive_scan(
+            df, F.col("o"), ["o"], sums={"s": "x"}, descending=descending
+        )
+        assert {r.o: r.s for r in got.collect()} == want
+
+
+def test_mann_whitney_u_drops_null_values(spark):
+    from mopper_spark.textops.rankstats import mann_whitney_u
+
+    df = spark.createDataFrame(
+        [(1, True), (2, False), (None, False)], "v long, g boolean"
+    )
+    r = mann_whitney_u(df, "v", "g").collect()[0]
+    assert (r.n_a, r.n_b, r.u2x_a, r.u2x_b) == (1, 1, 0, 2)
+
+
 def _single_partition_inputs(plan: str) -> list[str]:
     """The node each ``Exchange SinglePartition`` of a plan string reads
     (an exchange has one child: the next line of the tree)."""
@@ -87,6 +117,7 @@ def _single_partition_inputs(plan: str) -> list[str]:
 
 def _migrated_operators(spark):
     from mopper_spark.pipeline.curate import indexed_objects
+    from mopper_spark.textops.analysis import rank_auc
     from mopper_spark.pipeline.graphsig import canonical_blank_labels
     from mopper_spark.streaming import lateness_audit
     from mopper_spark.textops.layout import compaction_plan
@@ -135,6 +166,7 @@ def _migrated_operators(spark):
             events, "ts", "event_id", delay_seconds=60
         ),
         "perplexity_buckets": perplexity_buckets(docs, docs),
+        "rank_auc": rank_auc(vals, "x", "g"),
     }
 
 
@@ -151,3 +183,11 @@ def test_single_partition_exchanges_read_only_aggregates(spark):
         if any(r not in aggregates for r in readers):
             bad[name] = readers
     assert not bad, bad
+
+
+def test_rank_auc_refuses_non_integral_score(spark):
+    from mopper_spark.textops.analysis import rank_auc
+
+    df = spark.createDataFrame([(0.5, True)], "s double, y boolean")
+    with pytest.raises(ValueError, match="'s'"):
+        rank_auc(df, "s", "y")

@@ -1272,6 +1272,35 @@ class TestJsonFilterIterators:
         assert "BatchEvalPython" not in plan
         assert "ArrowEvalPython" not in plan
 
+    @pytest.mark.parametrize("value", ["${spark.app.name}", "a\\d"])
+    def test_filter_value_is_plain_text(self, spark, tmp_path, value):
+        # the quoted value is compared as written: no SQL variable
+        # substitution, no backslash escapes; top level and nested level
+        import json
+
+        from mopper_spark.sources import _json_iterate
+
+        items = [
+            {"id": "1", "k": value},
+            {"id": "2", "k": spark.conf.get("spark.app.name")},
+            {"id": "3", "k": "ad"},
+        ]
+        p = tmp_path / "d.json"
+        p.write_text(json.dumps({"items": items, "box": {"items": items}}))
+        top = _json_iterate(
+            spark, str(p), f"$.items[?(@.k=='{value}')]",
+            [{"name": "id", "path": "id"}],
+        )
+        assert [r.id for r in top.collect()] == ["1"]
+        nested = _json_iterate(
+            spark, str(p), "$.box", [],
+            nested=[{
+                "reference": f"items[?(@.k=='{value}')]",
+                "fields": [{"name": "id", "path": "id"}],
+            }],
+        )
+        assert [r.id for r in nested.collect()] == ["1"]
+
     def test_shexml_json_filter_end_to_end(self, spark, tmp_path):
         (tmp_path / "d.json").write_text(self.DOC)
         doc = """

@@ -690,3 +690,39 @@ def test_in_with_string_literals_and_expr(graph):
         }""",
     ))
     assert got == [(EX + "t1",), (EX + "t3",)]
+
+
+def _notes(spark):
+    app = spark.conf.get("spark.app.name")
+    return spark.createDataFrame(
+        [(EX + "n1", ONT + "note", "${spark.app.name}"),
+         (EX + "n2", ONT + "note", app),
+         (EX + "n3", ONT + "note", "it's"),
+         (EX + "n4", ONT + "note", "a\\d")],
+        ["subj", "pred", "obj"],
+    )
+
+
+def test_string_constant_is_not_variable_substituted(spark):
+    # Spark SQL replaces ${...} in SQL text before parsing; a SPARQL
+    # string constant must keep its characters
+    got = rows(sparql_query(
+        _notes(spark),
+        PFX + 'SELECT ?n WHERE { ?n ont:note ?o . FILTER(?o = "${spark.app.name}") }',
+    ))
+    assert got == [(EX + "n1",)]
+
+
+def test_string_constant_under_escaped_string_literals(spark):
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        got = rows(sparql_query(
+            _notes(spark),
+            PFX + 'SELECT ?n WHERE { ?n ont:note ?o . '
+            'FILTER(?o = "it\'s" || ?o = "a\\\\d") }',
+        ))
+    finally:
+        spark.conf.set(key, before)
+    assert got == [(EX + "n3",), (EX + "n4",)]
