@@ -398,11 +398,17 @@ def full_pipeline_stats(spark: SparkSession, n_turns: int, root: str) -> dict:
     from mopper_spark.pipeline.job import run_pipeline
 
     res = run_pipeline(spark, root, n_turns=n_turns, n_convs=max(n_turns // 200, 10))
+    stages = {
+        m["stage"]: {k: m[k] for k in ("rows", "files", "seconds", "skipped")}
+        for m in res.metrics
+    }
     return {
         "turns": res.turns,
         "seconds": round(res.seconds, 2),
         "turns_per_sec": round(res.turns_per_sec, 1),
-        "graph_triples": res.graph.count(),
+        # the graph manifest's footer row count: no job over the graph
+        "graph_triples": stages["graph"]["rows"],
+        "stages": stages,
     }
 
 

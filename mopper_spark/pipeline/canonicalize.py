@@ -8,9 +8,9 @@ themselves, so the component id already is that smallest member: no id
 dictionary, no join back, and two forms can never merge by a hash
 collision.
 
-The form dictionary is tiny relative to the corpus (distinct normalized
-mentions), so the final mention→canonical rewrite joins the mention stream
-against a **broadcast** dictionary — no corpus-wide shuffle.
+The form dictionary (distinct normalized mentions) grows with the
+vocabulary, so the mention→canonical rewrite joins it with no broadcast
+hint: the planner broadcasts it from its checkpoint's file size while small.
 """
 
 from __future__ import annotations

@@ -143,7 +143,7 @@ def mention_triples(mentions: DataFrame, canonical: DataFrame | None = None) -> 
         from mopper_spark.pipeline.linking import normalize_surface
 
         df = mentions.withColumn("norm", normalize_surface(F.col("surface"))).join(
-            F.broadcast(canonical), "norm", "left"
+            canonical, "norm", "left"
         )
         obj_col = F.coalesce(F.col("canonical_iri"), obj_col)
 

@@ -34,10 +34,10 @@ data; on data where no block exceeds the cap (the oracle fixture — recall
 pinned by tests) the two are identical.  This is the standard streaming-ER
 trade-off: pruning decisions cannot be retracted without replay.
 
-Scale shape per increment: fresh-forms keys ⋈ cumulative keys (shuffled
-hash join on the block key, fresh side is small), Arrow-batched pair
-scoring, then connected components over the AFFECTED canonical labels
-only — never over the full dictionary.  State lives in versioned parquet
+Scale shape per increment: the batch block grouping over the cumulative
+forms, pairs only where one side is fresh, Arrow-batched pair scoring,
+then connected components over the AFFECTED canonical labels only —
+never over the full dictionary.  State lives in versioned parquet
 (``dict/v{batch_id}`` + a ``_LATEST`` pointer written last), so a killed
 run resumes from the pointer and a replayed micro-batch rewrites its
 version deterministically — same idempotence discipline as
@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from mopper_spark.pipeline.canonicalize import canonical_map
 from mopper_spark.pipeline.linking import (
     _score_pair,
+    block_pairs,
     blocking_keys,
     normalize_surface,
 )
@@ -75,7 +76,6 @@ def link_increment(
 
     Pure and deterministic — the streaming wrapper just threads state.
     """
-    spark = dictionary.sparkSession
     fresh = (
         new_mentions.select(normalize_surface(F.col("surface")).alias("norm"))
         .distinct()
@@ -84,23 +84,11 @@ def link_increment(
     )
     if fresh.isEmpty():
         return dictionary
-    all_forms = dictionary.select("norm").unionByName(fresh.select("norm"))
-    keys_all = blocking_keys(all_forms)
+    all_forms = dictionary.selectExpr("norm", "false AS fresh").unionByName(
+        fresh.selectExpr("norm", "true AS fresh")
+    )
     # cumulative anti-quadratic cap (see module docstring for semantics)
-    sized = keys_all.join(
-        keys_all.groupBy("key").count().filter(F.col("count") <= max_block_size),
-        "key",
-    )
-    fresh_keys = sized.join(fresh, "norm")
-    a, b = fresh_keys.alias("a"), sized.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.key") == F.col("b.key")) & (F.col("a.norm") != F.col("b.norm")))
-        .select(
-            F.least(F.col("a.norm"), F.col("b.norm")).alias("norm_a"),
-            F.greatest(F.col("a.norm"), F.col("b.norm")).alias("norm_b"),
-        )
-        .distinct()
-    )
+    pairs = block_pairs(blocking_keys(all_forms), max_block_size, touching="fresh")
     edges = pairs.filter(_score_pair(F.col("norm_a"), F.col("norm_b")))
 
     # lift form-level edges to CANONICAL-level edges (fresh forms are their

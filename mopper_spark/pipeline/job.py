@@ -15,7 +15,7 @@ import json
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from mopper_spark.pipeline.canonicalize import canonical_map
@@ -96,7 +96,11 @@ def run_pipeline(
             raise RuntimeError(f"injected failure after stage {name!r}")
 
     fp_tr = _fp(fp_in, "extract")
-    triples = stage("triples", fp_tr, lambda: extract_triples(tr))
+    turns = Observation()  # the turn count rides on the triples write
+    triples = stage(
+        "triples", fp_tr, lambda: extract_triples(tr.observe(turns, F.expr("count(*) AS n")))
+    )
+    observed = any(m["stage"] == "triples" and not m["skipped"] for m in ckpt.metrics)
     guard("triples")
 
     fp_m = _fp(fp_in, "mentions")
@@ -129,11 +133,10 @@ def run_pipeline(
     )
     guard("graph")
 
-    n_turns_actual = tr.count()
     return PipelineResult(
         graph=graph,
         metrics=ckpt.metrics,
-        turns=n_turns_actual,
+        turns=turns.get["n"] if observed else tr.count(),
         seconds=time.time() - t0,
         transcripts=tr,
         mentions=mentions,

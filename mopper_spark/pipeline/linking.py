@@ -12,10 +12,10 @@ Scale design (north rule: 10^12 turns):
      "Venus Williams"),
    - MinHash band keys over character 3-shingles (LSH: forms sharing any
      band key become candidates), computed in one Arrow-batched pandas UDF.
-3. **Candidate pairs** = self-equi-join of the exploded (key, form) table —
-   a plain shuffled hash join on the block key; hot keys are bounded by a
-   per-key cap (blocking keys whose bucket exceeds ``max_block_size`` are
-   dropped as non-discriminative, the standard ER guard against
+3. **Candidate pairs**: one grouping of the (key, form) table collects each
+   block's sorted forms and one SQL higher-order expression pairs them —
+   no self-join, so MinHash runs once.  Blocks over ``max_block_size``
+   forms are dropped as non-discriminative (the standard ER guard against
    quadratic blowup on stop-word-ish blocks).
 4. **Pair scoring** in Arrow batches (shingle Jaccard + token containment +
    initial-expansion rule), threshold → accepted edges.
@@ -139,7 +139,7 @@ def _minhash_band_keys(norms: pd.Series) -> pd.Series:
 
 
 def blocking_keys(forms: DataFrame) -> DataFrame:
-    """Distinct forms → exploded (key, norm) blocking table."""
+    """Distinct forms (norm, …) → exploded (norm, …, key) blocking table."""
     toks = F.split(F.col("norm"), " ")
     token_sort = F.concat(F.lit("ts:"), F.array_join(F.array_sort(toks), " "))
     initial_last = F.concat(
@@ -151,7 +151,7 @@ def blocking_keys(forms: DataFrame) -> DataFrame:
     keys = F.concat(
         F.array(token_sort, initial_last), minhash_band_keys(F.col("norm"))
     )
-    return forms.select(F.col("norm"), F.explode(keys).alias("key"))
+    return forms.select("*", F.explode(keys).alias("key"))
 
 
 def _score_pair(a: Column, b: Column) -> Column:
@@ -198,21 +198,30 @@ def _score_pairs(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series([score(x, y) for x, y in zip(a, b)])
 
 
+def block_pairs(keys: DataFrame, max_block_size: int, touching: str | None = None) -> DataFrame:
+    """(key, norm, …) blocking table → distinct (norm_a < norm_b) pairs inside
+    each block of 2 to ``max_block_size`` distinct forms; larger blocks are
+    dropped as non-discriminative.  With ``touching`` (a boolean column of
+    ``keys``), only the pairs with a form for which it holds."""
+    pairs = (
+        "flatten(transform(ns, (a, i) -> transform(slice(ns, i + 2, size(ns)),"
+        " b -> named_struct('norm_a', a, 'norm_b', b))))"
+    )
+    aggs = ["array_sort(collect_set(norm)) AS ns"]
+    keep = f"size(ns) BETWEEN 2 AND {int(max_block_size)}"
+    if touching:
+        aggs.append(f"collect_set(IF({touching}, norm, NULL)) AS hit")
+        keep += " AND size(hit) > 0"
+        pairs = (
+            f"filter({pairs}, p -> array_contains(hit, p.norm_a) OR array_contains(hit, p.norm_b))"
+        )
+    blocks = keys.groupBy("key").agg(*map(F.expr, aggs)).where(keep)
+    return blocks.selectExpr(f"inline({pairs})").distinct()
+
+
 def candidate_pairs(forms: DataFrame, max_block_size: int = 64) -> DataFrame:
-    """Blocking self-join → distinct candidate (norm_a < norm_b) pairs."""
-    keys = blocking_keys(forms)
-    # drop non-discriminative blocks (quadratic-blowup guard)
-    sized = keys.join(
-        keys.groupBy("key").count().filter(F.col("count") <= max_block_size),
-        "key",
-    )
-    a = sized.alias("a")
-    b = sized.alias("b")
-    return (
-        a.join(b, (F.col("a.key") == F.col("b.key")) & (F.col("a.norm") < F.col("b.norm")))
-        .select(F.col("a.norm").alias("norm_a"), F.col("b.norm").alias("norm_b"))
-        .distinct()
-    )
+    """Distinct forms → distinct candidate (norm_a < norm_b) pairs."""
+    return block_pairs(blocking_keys(forms), max_block_size)
 
 
 def link_mentions(mentions: DataFrame, max_block_size: int = 64) -> DataFrame:

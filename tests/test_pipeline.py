@@ -21,11 +21,27 @@ from mopper_spark.pipeline.cc import connected_components
 from mopper_spark.pipeline.extract import extract_mentions, extract_triples
 from mopper_spark.pipeline.job import run_pipeline
 from mopper_spark.pipeline.linking import (
+    _minhash_band_keys,
+    candidate_pairs,
     link_mentions,
     normalize_surface,
     normalize_surface_py,
 )
 from mopper_spark.pipeline.transcripts import ENTITY_FORMS, synth_transcripts
+
+
+def _jobs_of(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module")
@@ -146,6 +162,42 @@ class TestLinking:
         assert len(set(all_canons)) == len(all_canons)
 
 
+    @staticmethod
+    def _blocked_pairs(forms: list[str], max_block_size: int):
+        """Brute-force blocking in Python: every form's keys, the blocks they
+        make, and the pairs inside each block of at most ``max_block_size``
+        forms; also the size of every block."""
+        blocks: dict[str, set[str]] = {}
+        for form, bands in zip(forms, _minhash_band_keys(pd.Series(forms))):
+            toks = form.split(" ")
+            for key in ["ts:" + " ".join(sorted(toks)), f"il:{toks[0][:1]}|{toks[-1]}", *bands]:
+                blocks.setdefault(key, set()).add(form)
+        pairs = {
+            (a, b)
+            for block in blocks.values() if len(block) <= max_block_size
+            for a in block for b in block if a < b
+        }
+        return pairs, {len(block) for block in blocks.values()}
+
+    def test_candidate_pairs_match_bruteforce(self, spark):
+        rng = random.Random(5)
+        words = ["ada", "adam", "lovelace", "love", "grace", "hopper", "hop", "alan", "turing"]
+        forms = {" ".join(rng.choices(words, k=rng.randint(1, 3))) for _ in range(60)}
+        # one initial+last block of exactly the cap (kept) and one of
+        # cap + 1 forms (dropped)
+        cap = 5
+        forms |= {f"q{c} zed" for c in "abcde"} | {f"w{c} yod" for c in "abcdef"}
+        forms = sorted(forms)
+        expect, sizes = self._blocked_pairs(forms, cap)
+        assert {cap, cap + 1} <= sizes
+        assert ("qa zed", "qe zed") in expect
+        assert expect != self._blocked_pairs(forms, cap + 1)[0]  # the cap bites
+        df = spark.createDataFrame([(f,) for f in forms], "norm string")
+        got = [(r.norm_a, r.norm_b) for r in candidate_pairs(df, max_block_size=cap).collect()]
+        assert len(got) == len(set(got))
+        assert set(got) == expect
+
+
 class TestConnectedComponents:
     def test_chain_and_star(self, spark):
         # path graph 0-1-2-3-4-5 plus separate triangle 10-11-12
@@ -225,6 +277,26 @@ class TestConnectedComponents:
         ]
         assert rounds == ["connected_components converged after 1 rounds"]
 
+    def test_star_round_job_budget(self, spark):
+        """One round on the star runs 4 jobs: the three adjacency groupings
+        (input, small-star, re-grouping) and the round's checkpoint, which
+        also carries the star-forest test.  An added shuffle or a separate
+        convergence job fails this."""
+        pairs = [(0, i) for i in range(1, 11)] + [(i, 0) for i in range(11, 21)]
+        edges = spark.createDataFrame(pairs, "u long, v long")
+        assert _jobs_of(spark, lambda: connected_components(edges)) <= 4
+
+    def test_max_iter_cut_still_one_row_per_node(self, spark, caplog):
+        caplog.set_level(logging.INFO, logger="mopper_spark.pipeline.cc")
+        labels = random.Random(7).sample(range(64), 64)
+        edges = spark.createDataFrame(list(zip(labels, labels[1:])), "u long, v long")
+        got = [(r.node, r.component) for r in connected_components(edges, max_iter=1).collect()]
+        assert sorted(node for node, _ in got) == list(range(64))
+        assert all(component <= node for node, component in got)
+        assert [r.getMessage() for r in caplog.records if r.name == "mopper_spark.pipeline.cc"] == [
+            "connected_components hit max_iter=1"
+        ]
+
     def test_canonical_map_drops_edges_leaving_forms(self, spark):
         """An edge with an endpoint outside ``forms`` takes no part: ``x``
         does not bridge ``a`` and ``c``."""
@@ -262,12 +334,19 @@ class TestResume:
 
     def test_rerun_all_skipped(self, spark, tmp_path):
         root = str(tmp_path / "ckpt3")
-        run_pipeline(spark, root, n_turns=150, n_convs=5)
+        fresh = run_pipeline(spark, root, n_turns=150, n_convs=5)
         res = run_pipeline(spark, root, n_turns=150, n_convs=5)
         assert all(m.get("skipped") for m in res.metrics)
+        # observed on the triples write, counted when triples is read back
+        # or not checkpointed
+        lazy = run_pipeline(
+            spark, str(tmp_path / "ckpt4"), n_turns=150, n_convs=5, checkpoint_stages={"graph"}
+        )
+        assert fresh.turns == res.turns == lazy.turns == 150
         # changing params invalidates
         res3 = run_pipeline(spark, root, n_turns=151, n_convs=5)
         assert not any(m.get("skipped") for m in res3.metrics)
+        assert res3.turns == 151
 
 
 class TestCheckpointCounters:
@@ -322,19 +401,10 @@ class TestCheckpointCounters:
         """A checkpointed stage runs the jobs of its write and nothing more:
         no counter job, and its read-back (also when the stage is skipped)
         is given its schema, so no schema-inference job."""
-        sc = spark.sparkContext
         df = spark.range(0, 200, 1, 4).withColumn("k", F.col("id") % 3)
 
         def jobs_of(fn) -> int:
-            group = f"ckpt-jobs-{uuid.uuid4().hex}"
-            sc.setJobGroup(group, group)
-            try:
-                fn()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            return len(sc.statusTracker().getJobIdsForGroup(group))
+            return _jobs_of(spark, fn)
 
         def bare():
             p = str(tmp_path / "bare")

@@ -78,14 +78,18 @@ def test_no_batch_eval_python_in_queries(catalog_builds):
             assert "ArrowEvalPython" not in s, f"{name} should be UDF-free"
 
 
-def test_canonical_rewrite_broadcasts(spark, transcripts):
+def test_canonical_rewrite_broadcasts(spark, transcripts, tmp_path):
+    """``mention_triples`` gives no broadcast hint: the pipeline passes the
+    canonical stage's parquet read-back, whose file size lets the planner
+    broadcast the map while it is small."""
     from mopper_spark.pipeline.extract import extract_mentions, mention_triples
 
     mentions = extract_mentions(transcripts)
-    canonical = spark.createDataFrame(
+    spark.createDataFrame(
         [("venus williams", "venus williams", "http://example.com/entity/venus")],
         "norm string, canonical_norm string, canonical_iri string",
-    )
+    ).write.parquet(str(tmp_path / "canonical"))
+    canonical = spark.read.parquet(str(tmp_path / "canonical"))
     s = _plan_str(mention_triples(mentions, canonical))
     assert "BroadcastHashJoin" in s
 
