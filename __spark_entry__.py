@@ -7201,8 +7201,9 @@ def _q_kg_rdfs_entailment(spark: SparkSession, sf: str) -> DataFrame:
     domain/range typing, a three-class hierarchy).  Every rule is a
     broadcast join of schema-sized relations against the instance graph;
     the oracle replays the staged pass with recursive CTEs (the schema is
-    stratified, so one pass IS the fixpoint — the Spark side's
-    verification loop proves it by re-running to count-stability)."""
+    stratified, so one pass IS the fixpoint; the Spark side's semi-naive
+    loop reaches it in two rounds, the second finding that the first
+    round's new statements entail nothing more)."""
     from mopper_spark.pipeline.extract import (
         extract_mentions,
         extract_triples,
@@ -7281,8 +7282,8 @@ def _q_kg_rdfs_incremental(spark: SparkSession, sf: str) -> DataFrame:
     base (~3/4) and a late-arriving delta (~1/4) by an md5 prefix of the
     full statement — engine-portable and partitioning-proof — the base
     is closed with the full reasoner, and the delta is folded in
-    frontier-only: every rule pass joins the broadcast pre-closed schema
-    against the DELTA alone, never rescanning the closed base (the
+    frontier-only: every rule round joins the broadcast schema, read
+    pre-closed from the base, against the DELTA alone (the
     10^12-turn contract: a new conversation batch costs O(|delta|), not
     O(|graph|)).  The oracle is the one-shot closure of base ∪ delta —
     the very SQL of kg_rdfs_entailment — so the gate hash proves
@@ -7355,8 +7356,9 @@ def _q_kg_owl_inference(spark: SparkSession, sf: str) -> DataFrame:
     statements), adjacentTo symmetric (prp-symp), and inConversation
     equivalent to partOf (eq-prop compiled to mutual subPropertyOf,
     materialized via rdfs5/rdfs7).  The oracle replays the staged pass;
-    the Spark side's verification loop proves one pass IS the fixpoint
-    for this schema by re-running to count-stability."""
+    the Spark side's semi-naive loop closes the transitive property once
+    and stops when its second round, over the first round's new
+    statements only, derives nothing."""
     from pyspark.sql import Window
 
     from mopper_spark.pipeline.extract import extract_triples

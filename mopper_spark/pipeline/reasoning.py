@@ -1,41 +1,53 @@
-"""RDFS entailment materialization — the forward-chaining closure every
-triple store ships (e.g. Jena RDFS reasoner, Oxigraph ruleset), expressed
-as a staged datalog fixpoint over DataFrames.
+"""RDFS and OWL 2 RL entailment materialization — the forward-chaining
+closure every triple store ships (e.g. Jena RDFS reasoner, Oxigraph
+ruleset), expressed as one semi-naive datalog loop over DataFrames — plus
+owl:sameAs smushing and RDF collection/container unfolding.
 
-Implements the core RDFS entailment rules of the W3C RDF 1.1 Semantics
-recommendation (section 9.2.1, rule names kept):
+Rules (W3C RDF 1.1 Semantics §9.2.1 and OWL 2 Profiles §4.3, names kept):
 
-    rdfs5   (p subPropertyOf q), (q subPropertyOf r)  ->  (p subPropertyOf r)
-    rdfs7   (s p o), (p subPropertyOf q)              ->  (s q o)
-    rdfs2   (s p o), (p domain C)                     ->  (s rdf:type C)
-    rdfs3   (s p o), (p range  C)                     ->  (o rdf:type C)
-    rdfs11  (C subClassOf D), (D subClassOf E)        ->  (C subClassOf E)
-    rdfs9   (s rdf:type C), (C subClassOf D)          ->  (s rdf:type D)
+    rdfs5    (p subPropertyOf q), (q subPropertyOf r)  ->  (p subPropertyOf r)
+    rdfs11   (C subClassOf D), (D subClassOf E)        ->  (C subClassOf E)
+    rdfs7    (s p o), (p subPropertyOf q)              ->  (s q o)
+    rdfs2    (s p o), (p domain C)                     ->  (s rdf:type C)
+    rdfs3    (s p o), (p range  C)                     ->  (o rdf:type C)
+    rdfs9    (s rdf:type C), (C subClassOf D)          ->  (s rdf:type D)
+  OWL (``owl_rl_lite`` only):
+    eq-rep   (p equivalentProperty q), (C equivalentClass D) compiled to
+             mutual subPropertyOf / subClassOf statements (prp-eqp1/2 and
+             cax-eqc1/2 then fall out of rdfs7/rdfs9)
+    prp-trp  (p type TransitiveProperty), (s p o), (o p o2) -> (s p o2)
+    prp-inv  (p inverseOf q), (s p o) -> (o q s);  (s q o) -> (o p s)
+    prp-symp (p type SymmetricProperty), (s p o) -> (o p s), run as
+             prp-inv with q = p (a symmetric property is its own inverse)
 
 The reference engine (ghsnd/mopper) CONSTRUCTS graphs from rows
 (src/operator/serializer.rs); materializing what those graphs entail is
 the canonical next step a KG-construction pipeline owes its consumers.
 
-Scale shape: the rules are stratified so ONE staged pass (property
-closure -> rdfs7 -> domain/range -> class closure -> rdfs9) reaches the
-fixpoint for every schema in which the RDFS vocabulary itself is not
-redefined; the pass is wrapped in a verification loop that re-runs until
-the statement count is stable, so pathological schemas (e.g. some p
-declared subPropertyOf rdf:type, which makes rule outputs feed earlier
-strata) still converge exactly.  Schema-shaped relations (the two
-closures, domain, range) are tiny next to the instance graph and are
-explicitly broadcast — every rule is a broadcast hash join against the
-instance triples, no instance-sized shuffle anywhere; the two transitive
-closures run semi-naive over schema-sized edge lists
-(pipeline/graph.py::transitive_closure).  Per-round lineage is cut with
-eager local checkpoints inside ``graph._constraint_propagation_off``
-(Spark 4.1 mis-rewrites Union constraints over checkpointed LogicalRDD
-children; the engine note is there).
+Evaluation (``_seminaive``, behind all three entry points): the schema
+relations — the subPropertyOf and subClassOf closures, domain, range,
+and for OWL the inverse pairs and transitive properties — are closed
+once (rdfs5/rdfs11 emitted from the closures) and are the only broadcast
+join sides.  Every other rule pairs ONE instance premise with schema
+premises, so a round applies the chained stages rdfs7 -> rdfs2/3 ->
+rdfs9 (-> prp-trp -> prp-inv/symp) to the frontier alone, and what the
+graph lacks becomes the next frontier; a stratified schema takes two
+rounds, the second deriving nothing.  prp-trp, the one rule with two
+instance premises, keeps its per-predicate closure as loop state and
+re-closes it (``graph._doubling_closure``: log(depth) rounds, transcripts
+chain hundreds of turns deep) only for transitive edges it lacks.  A
+round that derives a vocabulary statement (the schema redefines the
+vocabulary, e.g. p subPropertyOf rdfs:subPropertyOf) closes the schema
+again and makes the whole graph the next frontier: exact, only slower.
+Lineage is cut with local checkpoints inside
+``graph._constraint_propagation_off`` (engine note there).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mopper_spark.pipeline.cc import connected_components
@@ -52,94 +64,220 @@ RDFS_SUBPROP = RDFS_NS + "subPropertyOf"
 RDFS_DOMAIN = RDFS_NS + "domain"
 RDFS_RANGE = RDFS_NS + "range"
 
+OWL_NS = "http://www.w3.org/2002/07/owl#"
+OWL_INVERSE_OF = OWL_NS + "inverseOf"
+OWL_SYMMETRIC = OWL_NS + "SymmetricProperty"
+OWL_TRANSITIVE = OWL_NS + "TransitiveProperty"
+OWL_EQ_PROPERTY = OWL_NS + "equivalentProperty"
+OWL_EQ_CLASS = OWL_NS + "equivalentClass"
+OWL_SAMEAS = OWL_NS + "sameAs"
+
 _SPO = ("subj", "pred", "obj")
+_RDFS_VOCAB = (RDFS_SUBCLASS, RDFS_SUBPROP, RDFS_DOMAIN, RDFS_RANGE)
 
 
-def _closure_pairs(g: DataFrame, pred_iri: str) -> DataFrame:
-    """Transitive closure (>=1 hop) of one schema predicate as (src, dst)."""
-    edges = g.filter(F.col("pred") == pred_iri).select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
+def _pairs(
+    g: DataFrame, pred_iri: str, a: str = "src", b: str = "dst"
+) -> DataFrame:
+    """The (subj, obj) of one predicate's statements, named (a, b)."""
+    return g.filter(F.col("pred") == pred_iri).select(
+        F.col("subj").alias(a), F.col("obj").alias(b)
     )
-    return transitive_closure(edges)
 
 
-def _rdfs_pass(g: DataFrame) -> DataFrame:
-    """One stratified application of rdfs{5,7,2,3,11,9}; monotone."""
-    spc = _closure_pairs(g, RDFS_SUBPROP)
-    r5 = spc.select(
+def _statements(pairs: DataFrame, pred_iri: str) -> DataFrame:
+    """(src, dst) pairs as ``pred_iri`` statements."""
+    return pairs.select(
         F.col("src").alias("subj"),
-        F.lit(RDFS_SUBPROP).alias("pred"),
+        F.lit(pred_iri).alias("pred"),
         F.col("dst").alias("obj"),
     )
-    r7 = (
-        g.join(F.broadcast(spc), g["pred"] == spc["src"])
-        .select("subj", F.col("dst").alias("pred"), "obj")
-    )
-    g1 = (
-        g.unionByName(r5).unionByName(r7).distinct()
-        .localCheckpoint(eager=False)
+
+
+def _both_ways(pairs: DataFrame) -> DataFrame:
+    a, b = pairs.columns
+    return pairs.unionByName(pairs.select(F.col(b).alias(a), F.col(a).alias(b)))
+
+
+def _typed(g: DataFrame, cls: str) -> DataFrame:
+    """The subjects typed ``cls``, as column p."""
+    return g.filter((F.col("pred") == RDF_TYPE) & (F.col("obj") == cls)).select(
+        F.col("subj").alias("p")
     )
 
-    dom = g1.filter(F.col("pred") == RDFS_DOMAIN).select(
-        F.col("subj").alias("p"), F.col("obj").alias("cls")
+
+def _vocabulary(owl: bool) -> Column:
+    """The statements that change the schema when derived."""
+    if not owl:
+        return F.col("pred").isin(*_RDFS_VOCAB)
+    return F.col("pred").isin(
+        *_RDFS_VOCAB, OWL_INVERSE_OF, OWL_EQ_PROPERTY, OWL_EQ_CLASS
+    ) | (
+        (F.col("pred") == RDF_TYPE)
+        & F.col("obj").isin(OWL_TRANSITIVE, OWL_SYMMETRIC)
     )
-    rng = g1.filter(F.col("pred") == RDFS_RANGE).select(
-        F.col("subj").alias("p"), F.col("obj").alias("cls")
+
+
+class _Schema(NamedTuple):
+    spc: DataFrame  # subPropertyOf closure (src, dst)
+    scc: DataFrame  # subClassOf closure (src, dst)
+    dom: DataFrame  # (p, cls)
+    rng: DataFrame  # (p, cls)
+    inv: DataFrame | None  # OWL: (p, q) for prp-inv, and prp-symp as q = p
+    trans: DataFrame | None  # OWL: transitive properties (p)
+
+
+def _schema(g: DataFrame, owl: bool, *, close: bool) -> _Schema:
+    """The schema relations of ``g``.  With ``close`` the subPropertyOf
+    and subClassOf relations are closed here; without, ``g`` must be
+    closed already, so its own statements are the closures."""
+
+    def small(df: DataFrame) -> DataFrame:
+        return df.distinct().localCheckpoint(eager=False)
+
+    sp, sc = _pairs(g, RDFS_SUBPROP), _pairs(g, RDFS_SUBCLASS)
+    inv = trans = None
+    if owl:
+        sp = sp.unionByName(_both_ways(_pairs(g, OWL_EQ_PROPERTY)))
+        sc = sc.unionByName(_both_ways(_pairs(g, OWL_EQ_CLASS)))
+        # a symmetric property is its own inverse: prp-symp is prp-inv
+        # with q = p
+        inv = small(
+            _both_ways(_pairs(g, OWL_INVERSE_OF, "p", "q")).unionByName(
+                _typed(g, OWL_SYMMETRIC).select("p", F.col("p").alias("q"))
+            )
+        )
+        trans = small(_typed(g, OWL_TRANSITIVE))
+    return _Schema(
+        transitive_closure(sp) if close else small(sp),
+        transitive_closure(sc) if close else small(sc),
+        small(_pairs(g, RDFS_DOMAIN, "p", "cls")),
+        small(_pairs(g, RDFS_RANGE, "p", "cls")),
+        inv,
+        trans,
     )
-    r2 = (
-        g1.join(F.broadcast(dom), g1["pred"] == dom["p"])
-        .select("subj", F.lit(RDF_TYPE).alias("pred"), F.col("cls").alias("obj"))
+
+
+def _stage(d: DataFrame, *derived: DataFrame) -> DataFrame:
+    """``d`` with one rule stage's output added, lineage cut.  Duplicates
+    stay until the round's end (one distinct there, not one shuffle per
+    stage)."""
+    for r in derived:
+        d = d.unionByName(r)
+    return d.localCheckpoint(eager=False)
+
+
+def _derive(
+    frontier: DataFrame, s: _Schema, closure: DataFrame | None
+) -> tuple[DataFrame, DataFrame | None]:
+    """One round of chained rule stages over ``frontier``; returns the
+    frontier with its consequences, and the prp-trp closure."""
+    d = _stage(
+        frontier,
+        frontier.join(F.broadcast(s.spc), F.col("pred") == F.col("src")).select(
+            "subj", F.col("dst").alias("pred"), "obj"
+        ),  # rdfs7
     )
-    r3 = (
-        g1.join(F.broadcast(rng), g1["pred"] == rng["p"])
-        .select(
+    d = _stage(
+        d,
+        d.join(F.broadcast(s.dom), F.col("pred") == F.col("p")).select(
+            "subj", F.lit(RDF_TYPE).alias("pred"), F.col("cls").alias("obj")
+        ),  # rdfs2
+        d.join(F.broadcast(s.rng), F.col("pred") == F.col("p")).select(
             F.col("obj").alias("subj"),
             F.lit(RDF_TYPE).alias("pred"),
             F.col("cls").alias("obj"),
+        ),  # rdfs3
+    )
+    d = _stage(
+        d,
+        d.filter(F.col("pred") == RDF_TYPE)
+        .join(F.broadcast(s.scc), F.col("obj") == F.col("src"))
+        .select("subj", "pred", F.col("dst").alias("obj")),  # rdfs9
+    )
+    if s.trans is None:
+        return d, closure
+
+    # prp-trp: close again only over transitive edges the closure lacks
+    edges = d.join(F.broadcast(s.trans), F.col("pred") == F.col("p")).select(
+        "pred", F.col("subj").alias("src"), F.col("obj").alias("dst")
+    )
+    if closure is not None:
+        edges = edges.join(closure, ["pred", "src", "dst"], "left_anti")
+    edges = edges.localCheckpoint(eager=False)
+    if not edges.isEmpty():
+        closure = _doubling_closure(
+            edges if closure is None else closure.unionByName(edges),
+            ("pred",),
+            max_iters=20,
         )
-    )
-    g2 = (
-        g1.unionByName(r2).unionByName(r3).distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    scc = _closure_pairs(g2, RDFS_SUBCLASS)
-    r11 = scc.select(
-        F.col("src").alias("subj"),
-        F.lit(RDFS_SUBCLASS).alias("pred"),
-        F.col("dst").alias("obj"),
-    )
-    types = g2.filter(F.col("pred") == RDF_TYPE).select(
-        F.col("subj").alias("s"), F.col("obj").alias("c")
-    )
-    r9 = (
-        types.join(F.broadcast(scc), types["c"] == scc["src"])
-        .select(
-            F.col("s").alias("subj"),
-            F.lit(RDF_TYPE).alias("pred"),
-            F.col("dst").alias("obj"),
+        d = _stage(
+            d,
+            closure.select(
+                F.col("src").alias("subj"), "pred", F.col("dst").alias("obj")
+            ),
         )
-    )
-    return g2.unionByName(r11).unionByName(r9).distinct()
+    return _stage(
+        d,
+        d.join(F.broadcast(s.inv), F.col("pred") == F.col("p")).select(
+            F.col("obj").alias("subj"),
+            F.col("q").alias("pred"),
+            F.col("subj").alias("obj"),
+        ),  # prp-inv, prp-symp
+    ), closure
 
 
-def _fixpoint(triples: DataFrame, pass_fn, max_rounds: int, label: str) -> DataFrame:
-    """Run a monotone staged pass to count-stability with per-round eager
-    checkpoints, inside ``graph._constraint_propagation_off``."""
-    with _constraint_propagation_off(triples.sparkSession):
-        g = triples.select(*_SPO).distinct().localCheckpoint(eager=True)
-        n = g.count()
-        for _ in range(max_rounds):
-            g = pass_fn(g).localCheckpoint(eager=True)
-            n_new = g.count()
-            if n_new == n:
+def _seminaive(
+    g: DataFrame, frontier: DataFrame, *, owl: bool, max_rounds: int, label: str
+) -> DataFrame:
+    """The closure of ``g ∪ frontier``, where ``g`` is already closed.
+
+    Each round runs ``_derive`` over the frontier and keeps what ``g``
+    lacks as the next frontier.  The schema is read from ``g`` on the
+    first round; when the new statements hold a vocabulary statement it
+    is closed instead, its rdfs5/rdfs11 statements join ``g``, and the
+    whole of ``g`` is the frontier.  Raises when round ``max_rounds``
+    still derived statements."""
+    vocab = _vocabulary(owl)
+    with _constraint_propagation_off(frontier.sparkSession):
+        g = g.select(*_SPO).distinct().localCheckpoint(eager=True)
+        new = (
+            frontier.select(*_SPO)
+            .distinct()
+            .join(g, list(_SPO), "left_anti")
+            .localCheckpoint(eager=False)
+        )
+        schema, closure = None, None
+        for rnd in range(max_rounds + 1):
+            n, n_vocab = new.agg(F.count(F.lit(1)), F.count_if(vocab)).first()
+            if n == 0:
                 return g
-            n = n_new
-        raise RuntimeError(
-            f"{label} did not converge in {max_rounds} passes; "
-            "the schema feeds earlier strata (RDFS/OWL vocabulary "
-            "redefined) — raise max_rounds"
-        )
+            if rnd == max_rounds:
+                raise RuntimeError(
+                    f"{label} did not converge in {max_rounds} rounds; the "
+                    "rules feed each other deeper than that (vocabulary "
+                    "redefined, or symmetric and transitive properties "
+                    "combined) — raise max_rounds"
+                )
+            g = g.unionAll(new).localCheckpoint(eager=False)
+            frontier = new
+            if n_vocab:
+                schema = _schema(g, owl, close=True)
+                entailed = _statements(schema.spc, RDFS_SUBPROP).unionByName(
+                    _statements(schema.scc, RDFS_SUBCLASS)
+                )  # rdfs5, rdfs11, eq-rep
+                g = g.unionAll(
+                    entailed.join(g, list(_SPO), "left_anti")
+                ).localCheckpoint(eager=False)
+                frontier = g
+            elif schema is None:
+                schema = _schema(g, owl, close=False)
+            derived, closure = _derive(frontier, schema, closure)
+            new = (
+                derived.join(g, list(_SPO), "left_anti")
+                .distinct()
+                .localCheckpoint(eager=False)
+            )
 
 
 def rdfs_entailment(triples: DataFrame, *, max_rounds: int = 4) -> DataFrame:
@@ -152,14 +290,15 @@ def rdfs_entailment(triples: DataFrame, *, max_rounds: int = 4) -> DataFrame:
     is applied verbatim, so a range on a literal-valued predicate would
     mint literal subjects).
 
-    Raises after ``max_rounds`` verification passes without reaching the
-    fixpoint (one pass suffices unless the schema redefines the RDFS
-    vocabulary itself).
+    Raises when round ``max_rounds`` of the semi-naive loop still
+    derived statements: a stratified schema takes two rounds, and each
+    vocabulary redefinition (e.g. p subPropertyOf rdfs:subPropertyOf) a
+    derivation passes through adds rounds.
     """
-    return _fixpoint(triples, _rdfs_pass, max_rounds, "rdfs_entailment")
-
-
-_RDFS_VOCAB = (RDFS_SUBCLASS, RDFS_SUBPROP, RDFS_DOMAIN, RDFS_RANGE)
+    return _seminaive(
+        triples.limit(0), triples, owl=False, max_rounds=max_rounds,
+        label="rdfs_entailment",
+    )
 
 
 def rdfs_entailment_delta(
@@ -168,33 +307,27 @@ def rdfs_entailment_delta(
     """Incremental RDFS closure maintenance: given a graph that is
     ALREADY closed (``rdfs_entailment`` output) and a batch of new
     INSTANCE statements, return the closure of base ∪ delta — equal to
-    ``rdfs_entailment(base ∪ delta)`` — touching only the delta.
+    ``rdfs_entailment(base ∪ delta)`` — deriving from the delta alone.
 
     This is the streaming-scale form of the reasoner: at 10^12-turn
     scale the closed graph is petabyte-class and must never be
-    recomputed because one conversation batch arrived.  The key
-    property making frontier-only evaluation COMPLETE is that every
-    RDFS instance rule (rdfs7, rdfs2, rdfs3, rdfs9) pairs one instance
-    premise with one SCHEMA premise, and the closure rules (rdfs5,
-    rdfs11) pair two schema premises — so an instance-only delta can
-    never extend the schema relations, which are read pre-closed from
-    the base and broadcast.  No rule pairs two instance statements,
-    hence no (frontier × base-instance) join exists and each pass is
-    schema-broadcast joins against the frontier alone.
+    recomputed because one conversation batch arrived.  It is the
+    semi-naive loop of ``rdfs_entailment`` with the closed base as the
+    graph and the delta as the first frontier: schema-broadcast joins
+    against the frontier alone plus one anti-join against the graph.
 
-    ``delta`` must therefore contain NO RDFS-vocabulary statements
-    (subClassOf / subPropertyOf / domain / range) — a schema change
-    invalidates previously-derived statements' premises and requires
-    ``rdfs_entailment`` over the asserted graph; the function raises a
-    ``ValueError`` naming the offending predicates.  ``rdf:type``
-    statements in the delta are fine (rdfs9 applies via the broadcast
-    class closure).
-
-    The pass is wrapped in the same verification loop as the full
-    reasoner: normally round 2's frontier derives nothing new and the
-    loop exits; a base schema that redefines RDF/RDFS vocabulary
-    (e.g. some p ⊑ rdf:type) makes round-1 inferences feed rdfs7
-    again, and the loop chases that to the exact fixpoint.
+    ``delta`` must contain NO asserted RDFS-vocabulary statements
+    (subClassOf / subPropertyOf / domain / range); the function raises a
+    ``ValueError`` naming the offending predicates.  RDFS is monotone,
+    so a new schema statement invalidates nothing already derived — but
+    it applies to every statement of the base, not just the delta, and
+    that breaks the O(|delta|) contract; recompute with
+    ``rdfs_entailment`` instead.  ``rdf:type`` statements are fine
+    (rdfs9 applies through the broadcast class closure).  An instance
+    statement that DERIVES a schema statement (its predicate is declared
+    below a vocabulary term, e.g. p subPropertyOf rdfs:subPropertyOf)
+    is accepted and stays exact: the loop closes the schema again and
+    takes the whole graph as its next frontier, at full-recompute cost.
     """
     bad = (
         delta.filter(F.col("pred").isin(*_RDFS_VOCAB))
@@ -206,175 +339,14 @@ def rdfs_entailment_delta(
     if bad:
         raise ValueError(
             "rdfs_entailment_delta: delta contains RDFS schema statements "
-            f"({sorted(r.pred for r in bad)}); schema changes invalidate "
-            "incremental maintenance — recompute with rdfs_entailment"
+            f"({sorted(r.pred for r in bad)}); a schema statement applies "
+            "to the whole base, not just the delta — recompute with "
+            "rdfs_entailment"
         )
-    with _constraint_propagation_off(base_closed.sparkSession):
-        # Schema relations read pre-closed from the base; final for the
-        # whole run (instance deltas cannot extend them — see above).
-        spc = base_closed.filter(F.col("pred") == RDFS_SUBPROP).select(
-            F.col("subj").alias("src"), F.col("obj").alias("dst")
-        )
-        scc = base_closed.filter(F.col("pred") == RDFS_SUBCLASS).select(
-            F.col("subj").alias("src"), F.col("obj").alias("dst")
-        )
-        dom = base_closed.filter(F.col("pred") == RDFS_DOMAIN).select(
-            F.col("subj").alias("p"), F.col("obj").alias("cls")
-        )
-        rng = base_closed.filter(F.col("pred") == RDFS_RANGE).select(
-            F.col("subj").alias("p"), F.col("obj").alias("cls")
-        )
-
-        g = base_closed.select(*_SPO).distinct().localCheckpoint(eager=True)
-        frontier = (
-            delta.select(*_SPO)
-            .distinct()
-            .join(g, list(_SPO), "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        # Frontier is merged into g BEFORE its pass runs, so each round's
-        # next frontier is exactly the statements whose consequences are
-        # still unverified — genuine inferences only, never re-derivation.
-        g = g.unionByName(frontier).localCheckpoint(eager=True)
-        for _ in range(max_rounds):
-            if frontier.isEmpty():
-                return g
-            r7 = frontier.join(
-                F.broadcast(spc), frontier["pred"] == spc["src"]
-            ).select("subj", F.col("dst").alias("pred"), "obj")
-            d1 = (
-                frontier.unionByName(r7).distinct()
-                .localCheckpoint(eager=False)
-            )
-            r2 = d1.join(F.broadcast(dom), d1["pred"] == dom["p"]).select(
-                "subj",
-                F.lit(RDF_TYPE).alias("pred"),
-                F.col("cls").alias("obj"),
-            )
-            r3 = d1.join(F.broadcast(rng), d1["pred"] == rng["p"]).select(
-                F.col("obj").alias("subj"),
-                F.lit(RDF_TYPE).alias("pred"),
-                F.col("cls").alias("obj"),
-            )
-            d2 = (
-                d1.unionByName(r2).unionByName(r3).distinct()
-                .localCheckpoint(eager=False)
-            )
-            types = d2.filter(F.col("pred") == RDF_TYPE).select(
-                F.col("subj").alias("s"), F.col("obj").alias("c")
-            )
-            r9 = types.join(F.broadcast(scc), types["c"] == scc["src"]).select(
-                F.col("s").alias("subj"),
-                F.lit(RDF_TYPE).alias("pred"),
-                F.col("dst").alias("obj"),
-            )
-            d3 = d2.unionByName(r9).distinct()
-            new = (
-                d3.join(g, list(_SPO), "left_anti")
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            g = g.unionByName(new).localCheckpoint(eager=True)
-            frontier = new  # frontier ⊆ g already, so `new` excludes it
-        raise RuntimeError(
-            f"rdfs_entailment_delta did not converge in {max_rounds} "
-            "passes; the base schema feeds earlier strata (RDF/RDFS "
-            "vocabulary redefined) — raise max_rounds"
-        )
-
-
-# --------------------------------------------------------------------------
-# OWL 2 RL (property-rule subset) + sameAs smushing
-# --------------------------------------------------------------------------
-
-OWL_NS = "http://www.w3.org/2002/07/owl#"
-OWL_INVERSE_OF = OWL_NS + "inverseOf"
-OWL_SYMMETRIC = OWL_NS + "SymmetricProperty"
-OWL_TRANSITIVE = OWL_NS + "TransitiveProperty"
-OWL_EQ_PROPERTY = OWL_NS + "equivalentProperty"
-OWL_EQ_CLASS = OWL_NS + "equivalentClass"
-OWL_SAMEAS = OWL_NS + "sameAs"
-
-
-def _owl_pass(g: DataFrame) -> DataFrame:
-    """One staged application of the OWL 2 RL property rules (W3C OWL 2
-    Profiles §4.3, rule names kept) on top of the full RDFS stratum:
-
-        eq-rep   owl:equivalentProperty/Class compiled to MUTUAL
-                 rdfs:subPropertyOf / rdfs:subClassOf statements, so
-                 prp-eqp1/2 and cax-eqc1/2 fall out of rdfs7/rdfs9
-        rdfs     the complete _rdfs_pass stratum
-        prp-trp  (p type TransitiveProperty), (s p o), (o p o2) -> (s p o2)
-        prp-inv1/2  (p inverseOf q), (s p o) -> (o q s)  and symmetrically
-        prp-symp (p type SymmetricProperty), (s p o) -> (o p s)
-
-    Stages are CHAINED (each sees the previous stage's output), ordered
-    transitive -> inverse -> symmetric so inverses/symmetries of
-    closure-derived statements land in the same pass; the enclosing
-    fixpoint loop covers schemas where a later stage feeds an earlier one
-    (e.g. a symmetric property that is also transitive needs round 2's
-    closure over the reversed edges).  Schema relations (inverse pairs,
-    property-type sets) are broadcast; prp-trp's instance-level closure
-    is the only super-linear stage and runs keyed per predicate in
-    log(diameter) doubling rounds (``graph._doubling_closure``:
-    transcripts chain hundreds of turns deep, where semi-naive's
-    diameter-many rounds would dominate wall clock)."""
-    eqp = g.filter(F.col("pred") == OWL_EQ_PROPERTY)
-    eqp_sub = eqp.select(
-        "subj", F.lit(RDFS_SUBPROP).alias("pred"), "obj"
-    ).unionByName(
-        eqp.select(
-            F.col("obj").alias("subj"),
-            F.lit(RDFS_SUBPROP).alias("pred"),
-            F.col("subj").alias("obj"),
-        )
+    return _seminaive(
+        base_closed, delta, owl=False, max_rounds=max_rounds,
+        label="rdfs_entailment_delta",
     )
-    eqc = g.filter(F.col("pred") == OWL_EQ_CLASS)
-    eqc_sub = eqc.select(
-        "subj", F.lit(RDFS_SUBCLASS).alias("pred"), "obj"
-    ).unionByName(
-        eqc.select(
-            F.col("obj").alias("subj"),
-            F.lit(RDFS_SUBCLASS).alias("pred"),
-            F.col("subj").alias("obj"),
-        )
-    )
-    g = _rdfs_pass(
-        g.unionByName(eqp_sub).unionByName(eqc_sub).distinct()
-        .localCheckpoint(eager=False)
-    ).localCheckpoint(eager=False)
-
-    tp = g.filter(
-        (F.col("pred") == RDF_TYPE) & (F.col("obj") == OWL_TRANSITIVE)
-    ).select(F.col("subj").alias("p"))
-    tedges = g.join(F.broadcast(tp), g["pred"] == tp["p"]).select(
-        "pred", F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    r_trp = _doubling_closure(tedges, ("pred",), max_iters=20).select(
-        F.col("src").alias("subj"), "pred", F.col("dst").alias("obj")
-    )
-    g = g.unionByName(r_trp).distinct().localCheckpoint(eager=False)
-
-    inv0 = g.filter(F.col("pred") == OWL_INVERSE_OF).select(
-        F.col("subj").alias("p"), F.col("obj").alias("q")
-    )
-    inv = inv0.unionByName(
-        inv0.select(F.col("q").alias("p"), F.col("p").alias("q"))
-    ).distinct()
-    r_inv = g.join(F.broadcast(inv), g["pred"] == inv["p"]).select(
-        F.col("obj").alias("subj"),
-        F.col("q").alias("pred"),
-        F.col("subj").alias("obj"),
-    )
-    g = g.unionByName(r_inv).distinct().localCheckpoint(eager=False)
-
-    symp = g.filter(
-        (F.col("pred") == RDF_TYPE) & (F.col("obj") == OWL_SYMMETRIC)
-    ).select(F.col("subj").alias("p"))
-    r_sym = g.join(F.broadcast(symp), g["pred"] == symp["p"]).select(
-        F.col("obj").alias("subj"), "pred", F.col("subj").alias("obj")
-    )
-    return g.unionByName(r_sym).distinct()
 
 
 def owl_rl_lite(triples: DataFrame, *, max_rounds: int = 6) -> DataFrame:
@@ -383,15 +355,24 @@ def owl_rl_lite(triples: DataFrame, *, max_rounds: int = 6) -> DataFrame:
     TransitiveProperty) plus the full RDFS ruleset — the schema-driven
     entailment layer a KG-construction pipeline owes consumers who query
     the graph through an ontology (the reference emits asserted triples
-    only; see rdfs_entailment's module docstring for the lineage).
+    only; see the module docstring for the rules and the loop).
 
     Same contract as ``rdfs_entailment``: statements mixed RDF-style,
     returns asserted+inferred distinct, literal-valued predicates must
     not carry inverse/symmetric/range declarations (the rules would mint
-    literal subjects), raises if ``max_rounds`` verification passes don't
-    reach the fixpoint (one pass suffices for stratified schemas; rule
-    interactions like symmetric+transitive properties converge in 2-3)."""
-    return _fixpoint(triples, _owl_pass, max_rounds, "owl_rl_lite")
+    literal subjects).  Raises when round ``max_rounds`` still derived
+    statements: a stratified schema takes two rounds and closes the
+    transitive properties once; a property both symmetric and transitive
+    takes three (the reversed edges are closed in round two)."""
+    return _seminaive(
+        triples.limit(0), triples, owl=True, max_rounds=max_rounds,
+        label="owl_rl_lite",
+    )
+
+
+# --------------------------------------------------------------------------
+# owl:sameAs smushing, RDF collections and containers
+# --------------------------------------------------------------------------
 
 
 def sameas_canonicalize(

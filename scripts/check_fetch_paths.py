@@ -19,11 +19,13 @@ in the Spark query.  Exit 1 on any divergence.
 """
 import hashlib
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 import __spark_entry__ as entry_mod
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"

@@ -2,12 +2,14 @@
 and its oracle_sql() in DuckDB at sf0.01; compare row count, schema shape,
 and an order-insensitive value hash (columns sorted by name, rows sorted)."""
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 import __spark_entry__ as entry_mod
 from mopper_spark.session import get_spark
 

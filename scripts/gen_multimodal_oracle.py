@@ -9,6 +9,7 @@ Usage: python scripts/gen_multimodal_oracle.py [n]
 """
 
 import hashlib
+import os
 import sys
 import zlib
 
@@ -43,5 +44,6 @@ table = pa.table(
         "feat_sum": pa.array(rows["feat_sum"], pa.float64()),
     }
 )
-pq.write_table(table, "/root/repo/fixtures/multimodal_features.parquet")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+pq.write_table(table, os.path.join(ROOT, "fixtures", "multimodal_features.parquet"))
 print(f"wrote {N} rows to fixtures/multimodal_features.parquet")

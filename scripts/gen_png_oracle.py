@@ -15,6 +15,7 @@ encoder's code path.
 Usage: python scripts/gen_png_oracle.py [n]
 """
 
+import os
 import sys
 
 import pyarrow as pa
@@ -59,5 +60,6 @@ table = pa.table(
         "mean_px": pa.array(rows["mean_px"], pa.float64()),
     }
 )
-pq.write_table(table, "/root/repo/fixtures/png_features.parquet")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+pq.write_table(table, os.path.join(ROOT, "fixtures", "png_features.parquet"))
 print(f"wrote {N} rows to fixtures/png_features.parquet")

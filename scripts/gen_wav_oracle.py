@@ -11,6 +11,7 @@ Usage: python scripts/gen_wav_oracle.py [n]
 
 import io
 import math
+import os
 import struct
 import sys
 import wave
@@ -18,7 +19,8 @@ import wave
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from mopper_spark.textops.multimodal import synth_wav_payload
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 32
@@ -54,5 +56,5 @@ table = pa.table(
         "zcr": pa.array(rows["zcr"], pa.float64()),
     }
 )
-pq.write_table(table, "/root/repo/fixtures/wav_features.parquet")
+pq.write_table(table, os.path.join(ROOT, "fixtures", "wav_features.parquet"))
 print(f"wrote {N} rows to fixtures/wav_features.parquet")

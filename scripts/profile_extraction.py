@@ -1,11 +1,13 @@
 """Profile the extraction stages (used to tune the hot path).
 
-Usage: PYTHONPATH=/root/repo python scripts/profile_extraction.py [n_rows]
+Usage (from the repository root): PYTHONPATH=. python scripts/profile_extraction.py [n_rows]
 """
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from pyspark.sql import functions as F
 
 from bench import warm_python_workers

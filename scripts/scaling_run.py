@@ -18,7 +18,8 @@ Usage: [taskset -c 0-N] python scripts/scaling_run.py <cores> <n_turns> <parquet
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from bench import extraction_throughput, warm_python_workers
 from mopper_spark.session import get_spark
 

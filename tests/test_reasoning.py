@@ -104,8 +104,8 @@ def test_rdfs_domain_on_inferred_property(spark):
 
 _STRATUM_BREAKER = [
     # ex:meta subPropertyOf rdfs:subPropertyOf: rdfs7 MINTS a
-    # subPropertyOf edge (ex:a sub ex:b), which only the NEXT pass's
-    # property closure can see — the staged order is genuinely broken.
+    # subPropertyOf edge (ex:a sub ex:b), which only a property closure
+    # taken AFTER that round can see — the staged order is genuinely broken.
     ("ex:a", "ex:meta", "ex:b"),
     ("ex:meta", RDFS_SUBPROP, RDFS_SUBPROP),
     ("s", "ex:a", "o"),
@@ -113,11 +113,11 @@ _STRATUM_BREAKER = [
 
 
 def test_rdfs_pathological_vocabulary_redefinition(spark):
-    """A derived subPropertyOf edge feeds an earlier stratum — the
-    verification loop must iterate past the first staged pass."""
+    """A derived subPropertyOf edge feeds an earlier stratum — the loop
+    must close the schema again and revisit the whole graph."""
     got = _run(spark, _STRATUM_BREAKER, max_rounds=4)
-    assert ("ex:a", RDFS_SUBPROP, "ex:b") in got  # pass 1 (rdfs7)
-    assert ("s", "ex:b", "o") in got  # pass 2 (rdfs7 over the new edge)
+    assert ("ex:a", RDFS_SUBPROP, "ex:b") in got  # round 1 (rdfs7)
+    assert ("s", "ex:b", "o") in got  # round 2 (rdfs7 over the new edge)
 
 
 def test_rdfs_nonconvergence_raises(spark):
@@ -205,23 +205,25 @@ def _run_owl(spark, rows, **kw):
     return got
 
 
+_OWL_STRATIFIED = [
+    # a 4-node chain under a transitive property
+    ("a", "ex:next", "b"),
+    ("b", "ex:next", "c"),
+    ("c", "ex:next", "d"),
+    ("ex:next", RDF_TYPE, OWL_TRANSITIVE),
+    # inverse minted over BOTH asserted and closure-derived statements
+    ("ex:next", OWL_INVERSE_OF, "ex:prev"),
+    # symmetric
+    ("x", "ex:adj", "y"),
+    ("ex:adj", RDF_TYPE, OWL_SYMMETRIC),
+    # equivalence feeding rdfs7
+    ("t", "ex:inConv", "c1"),
+    ("ex:inConv", OWL_EQ_PROPERTY, "ex:partOf"),
+]
+
+
 def test_owl_rules_end_to_end(spark):
-    rows = [
-        # a 4-node chain under a transitive property
-        ("a", "ex:next", "b"),
-        ("b", "ex:next", "c"),
-        ("c", "ex:next", "d"),
-        ("ex:next", RDF_TYPE, OWL_TRANSITIVE),
-        # inverse minted over BOTH asserted and closure-derived statements
-        ("ex:next", OWL_INVERSE_OF, "ex:prev"),
-        # symmetric
-        ("x", "ex:adj", "y"),
-        ("ex:adj", RDF_TYPE, OWL_SYMMETRIC),
-        # equivalence feeding rdfs7
-        ("t", "ex:inConv", "c1"),
-        ("ex:inConv", OWL_EQ_PROPERTY, "ex:partOf"),
-    ]
-    got = _run_owl(spark, rows)
+    got = _run_owl(spark, _OWL_STRATIFIED)
     assert ("a", "ex:next", "d") in got  # prp-trp, 3 hops
     assert ("d", "ex:prev", "a") in got  # prp-inv over the closure
     assert ("y", "ex:adj", "x") in got  # prp-symp
@@ -229,19 +231,46 @@ def test_owl_rules_end_to_end(spark):
     assert ("ex:partOf", RDFS_SUBPROP, "ex:inConv") in got
 
 
+_SYM_TRANS = [
+    ("a", "ex:near", "b"),
+    ("c", "ex:near", "b"),  # needs b->c from symmetry to reach a->c
+    ("ex:near", RDF_TYPE, OWL_SYMMETRIC),
+    ("ex:near", RDF_TYPE, OWL_TRANSITIVE),
+]
+
+
 def test_owl_symmetric_transitive_interaction(spark):
     """A property both symmetric AND transitive: round 1's closure misses
-    paths through reversed edges; the fixpoint loop must complete them
-    (the component becomes a clique plus self-loops)."""
-    rows = [
-        ("a", "ex:near", "b"),
-        ("c", "ex:near", "b"),  # needs b->c from symmetry to reach a->c
-        ("ex:near", RDF_TYPE, OWL_SYMMETRIC),
-        ("ex:near", RDF_TYPE, OWL_TRANSITIVE),
-    ]
-    got = _run_owl(spark, rows)
+    paths through reversed edges; the loop must complete them (the
+    component becomes a clique plus self-loops)."""
+    got = _run_owl(spark, _SYM_TRANS)
     assert ("a", "ex:near", "c") in got
     assert ("a", "ex:near", "a") in got  # via a->b->a
+
+
+def test_owl_stratified_schema_closes_transitive_edges_once(spark, monkeypatch):
+    """Round 2 of a stratified schema brings no transitive edge the
+    prp-trp closure lacks, so the closure kernel runs once, not again to
+    confirm the fixpoint."""
+    from mopper_spark.pipeline import reasoning
+
+    calls = []
+    kernel = reasoning._doubling_closure
+
+    def counting(*args, **kw):
+        calls.append(1)
+        return kernel(*args, **kw)
+
+    monkeypatch.setattr(reasoning, "_doubling_closure", counting)
+    _run_owl(spark, _OWL_STRATIFIED)
+    assert len(calls) == 1
+
+
+def test_owl_nonconvergence_raises(spark):
+    """Symmetric + transitive derives new statements in rounds 1 and 2."""
+    df = spark.createDataFrame(_SYM_TRANS, "subj string, pred string, obj string")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        owl_rl_lite(df, max_rounds=1)
 
 
 def test_owl_inverse_of_subproperty_inferred_statements(spark):
@@ -417,9 +446,8 @@ def test_delta_schema_statement_refused(spark):
 
 
 def test_delta_pathological_base_schema_iterates(spark):
-    """Base schema redefines RDF vocabulary (p ⊑ rdf:type): round-1
-    rdfs7 output is an rdf:type statement that rdfs9 must then chase in
-    round 2 — the verification loop, not the single pass, finds it."""
+    """Base schema redefines RDF vocabulary (p ⊑ rdf:type): rdfs7 output
+    is an rdf:type statement that rdfs9 must then chase."""
     schema = [
         ("ex:isa", RDFS_SUBPROP, RDF_TYPE),
         ("ex:C", RDFS_SUBCLASS, "ex:D"),
@@ -436,6 +464,30 @@ def test_delta_pathological_base_schema_iterates(spark):
     assert ("s", RDF_TYPE, "ex:D") in inc  # rdfs9 over the derived type
 
 
+@pytest.mark.parametrize(
+    "meta_super, delta_obj, entailed",
+    [
+        (RDFS_SUBPROP, "ex:b", ("s", "ex:b", "o")),
+        (RDFS_DOMAIN, "ex:C", ("s", RDF_TYPE, "ex:C")),
+    ],
+)
+def test_delta_derives_schema_statement(spark, meta_super, delta_obj, entailed):
+    """An instance statement in the delta whose predicate sits below a
+    vocabulary term derives a schema statement, which applies to the
+    BASE's statements too: (ex:a ex:meta X) makes ex:a a subproperty of
+    ex:b, or gives ex:a the domain ex:C, and (s ex:a o) in the base must
+    follow it."""
+    base = [("ex:meta", RDFS_SUBPROP, meta_super), ("s", "ex:a", "o")]
+    delta = [("ex:a", "ex:meta", delta_obj)]
+    base_closed = rdfs_entailment(_spo_df(spark, base))
+    inc = {
+        tuple(r)
+        for r in rdfs_entailment_delta(base_closed, _spo_df(spark, delta)).collect()
+    }
+    assert inc == _python_rdfs_fixpoint(base + delta)
+    assert entailed in inc
+
+
 def test_delta_partitioning_invariance(spark):
     base_inst = [(f"t{i}", "ex:mentions", f"e{i % 4}") for i in range(12)]
     delta_rows = [(f"d{i}", "ex:mentions", f"e{i % 5}") for i in range(9)]
@@ -450,6 +502,82 @@ def test_delta_partitioning_invariance(spark):
         for r in rdfs_entailment_delta(base_closed, d.repartition(16)).collect()
     }
     assert a == b == _python_rdfs_fixpoint(_INC_SCHEMA + base_inst + delta_rows)
+
+
+# --------------------------------------------------------------------------
+# Differential test: all three reasoners against the Python replicas
+# --------------------------------------------------------------------------
+
+# Vocabulary terms a random graph's ``meta`` property may be declared below,
+# so that instance statements over ``meta`` derive schema statements.
+_RDFS_SCHEMA = (RDFS_SUBPROP, RDFS_SUBCLASS, RDFS_DOMAIN, RDFS_RANGE)
+_REDEFINABLE = _RDFS_SCHEMA + (
+    RDF_TYPE, OWL_INVERSE_OF, OWL_EQ_PROPERTY, OWL_EQ_CLASS,
+)
+
+
+def _random_graph(rng, i):
+    """A small graph over its own names (prefix ``g{i}:``) that uses every
+    vocabulary term the reasoners handle, redefinitions included."""
+    def name(kind, k):
+        return f"g{i}:{kind}{rng.randrange(k)}"
+
+    def prop():
+        return name("p", 4)
+
+    def cls():
+        return name("c", 4)
+
+    def node():
+        return name("x", 5)
+
+    meta = f"g{i}:meta"
+    makers = [
+        lambda: (node(), prop(), node()),
+        lambda: (node(), RDF_TYPE, cls()),
+        lambda: (prop(), RDFS_SUBPROP, prop()),
+        lambda: (cls(), RDFS_SUBCLASS, cls()),
+        lambda: (prop(), RDFS_DOMAIN, cls()),
+        lambda: (prop(), RDFS_RANGE, cls()),
+        lambda: (prop(), RDF_TYPE, OWL_TRANSITIVE),
+        lambda: (prop(), RDF_TYPE, OWL_SYMMETRIC),
+        lambda: (prop(), OWL_INVERSE_OF, prop()),
+        lambda: (prop(), OWL_EQ_PROPERTY, prop()),
+        lambda: (cls(), OWL_EQ_CLASS, cls()),
+        lambda: (cls(), RDFS_SUBCLASS, rng.choice([OWL_TRANSITIVE, OWL_SYMMETRIC])),
+        lambda: (meta, RDFS_SUBPROP, rng.choice(_REDEFINABLE)),
+        lambda: (rng.choice([prop(), cls()]), meta, rng.choice([prop(), cls()])),
+    ]
+    rows = {(node(), prop(), node()) for _ in range(4)}
+    rows |= {rng.choice(makers)() for _ in range(rng.randint(6, 12))}
+    return sorted(rows)
+
+
+def test_reasoners_match_python_replicas_on_random_graphs(spark):
+    """The disjoint union of 20 seeded random graphs, one call per
+    reasoner: ``rdfs_entailment`` and ``owl_rl_lite`` on the whole union,
+    ``rdfs_entailment_delta`` on a random split whose delta holds no
+    asserted RDFS schema statement (its base closed by the replica)."""
+    import random
+
+    rng = random.Random(20261021)
+    rows = [t for i in range(20) for t in _random_graph(rng, i)]
+    delta = [t for t in rows if t[1] not in _RDFS_SCHEMA and rng.random() < 0.4]
+    base = [t for t in rows if t not in delta]
+    want = _python_rdfs_fixpoint(rows)
+
+    got = {tuple(r) for r in rdfs_entailment(_spo_df(spark, rows), max_rounds=20).collect()}
+    assert got == want
+    base_closed = _spo_df(spark, sorted(_python_rdfs_fixpoint(base)))
+    got = {
+        tuple(r)
+        for r in rdfs_entailment_delta(
+            base_closed, _spo_df(spark, delta), max_rounds=20
+        ).collect()
+    }
+    assert got == want
+    got = {tuple(r) for r in owl_rl_lite(_spo_df(spark, rows), max_rounds=20).collect()}
+    assert got == _python_owl_fixpoint(rows)
 
 
 class TestRdfListMembers:
